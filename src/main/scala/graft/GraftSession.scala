@@ -14,11 +14,14 @@ import org.apache.spark.sql.SparkSession
   *    [[Tables.events]]).
   *  - UTC session timezone: event-time semantics must not depend on the
   *    cluster's locale.
+  *  - `file:` goes through [[graft.io.ForkFreeLocalFs]]: the same bytes,
+  *    `.crc` sidecars and permissions as Hadoop's local file system,
+  *    without a process fork per checkpoint file.
   */
 object GraftSession {
 
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -46,10 +49,20 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
+    // Hadoop's local file system forks `chmod`/`readlink` per checkpoint
+    // file without the native library; see [[graft.io.ForkFreeLocalFs]].
+    graft.io.ForkFreeLocalFs.hadoopConfs.foreach { case (k, v) =>
+      b.config("spark.hadoop." + k, v)
+    }
+    b
+  }
+
+  /** This machine's core count: the width of a local[N] session. */
+  def cores: Int = Runtime.getRuntime.availableProcessors()
 
   /** Local session sized like the driver harness (local[N], N shuffle
     * partitions — not the 200 default, which just fragments tiny inputs). */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(cores: Int = GraftSession.cores): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

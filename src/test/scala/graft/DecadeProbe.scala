@@ -11,7 +11,7 @@ object DecadeProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "localdata/sf1")
     val bits = sys.env.getOrElse("SPARK_GRAFT_DBSCAN_BITS", "8").toInt
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.builder(s"local[${GraftSession.cores}]", GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.embeddings(spark, dir).count() // warm the scan
     val times = (1 to 3).map { _ =>

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object IndexVocabProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 8).getOrCreate()
+    val spark = GraftSession.builder(s"local[${GraftSession.cores}]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val batches = 12
@@ -85,7 +85,7 @@ object IndexVocabProbe {
 
 object StateSizeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 8).getOrCreate()
+    val spark = GraftSession.builder(s"local[${GraftSession.cores}]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext

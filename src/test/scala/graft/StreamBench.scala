@@ -79,12 +79,12 @@ object StreamBench {
     // SCALE.md knob study — small micro-batches pay a per-PARTITION
     // commit fee per state store, so partitions are sized to ~250 rows
     // each at the headline chunk (2000 → 8 partitions), floored at 4
-    // and capped at the 32-core width. Rounds ≤ 16 ran a fixed 32; the
+    // and capped at the core count. Rounds ≤ 16 ran a fixed 32; the
     // artifact records `state_partitions` so the shift is explicit.
     val shuffle = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
       .flatMap(_.trim.toIntOption)
-      .getOrElse(math.max(4, math.min(32, primaryChunk / 250)))
-    val spark = GraftSession.builder("local[32]", shuffle).getOrCreate()
+      .getOrElse(math.max(4, math.min(GraftSession.cores, primaryChunk / 250)))
+    val spark = GraftSession.builder(s"local[${GraftSession.cores}]", shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sql = spark.sqlContext
