@@ -43,8 +43,7 @@ object GraftSession {
       // run. 8,000 entries fits the whole suite with headroom; classes are
       // small (tens of MB of metaspace at this count). (Static conf —
       // must be set before the session exists.)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
@@ -66,13 +65,5 @@ object GraftSession {
     val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
-  }
-
-  /** Apply the graft configs to an externally-created session's conf where
-    * possible (runtime-settable ones only). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark
   }
 }

@@ -205,22 +205,6 @@ object StreamVerify {
         (out, SparkEntry.queries("k1_latest_per_key")(s, dir))
       }),
 
-    ("k1_ktable_tws", "k1_latest_per_key", "full",
-      (s: SparkSession, dir: String) => {
-        import s.implicits._
-        val evs = eventsSorted(s, dir)
-        val recs = eventRecs(evs)(e => s"${e.event_id}|${e.event_type}|${e.ts_sec}")
-        val changes = replay(s, chunksOf(recs, 4))(in =>
-          KTableStreamTws.changes(in).toDF())
-        val out = liveView(s, changes)
-          .select(split(col("value"), "\\|").as("p"), col("key"))
-          .select(col("key").cast("long").as("user_id"),
-            col("p").getItem(0).cast("long").as("event_id"),
-            col("p").getItem(1).as("event_type"),
-            col("p").getItem(2).cast("long").as("ts_sec"))
-        (out, SparkEntry.queries("k1_latest_per_key")(s, dir))
-      }),
-
     ("k2_tombstone", "k2_upsert_tombstone", "full",
       (s: SparkSession, dir: String) => {
         import s.implicits._
@@ -480,10 +464,25 @@ object StreamVerify {
       }),
 
     ("j6_fk_left", "j6_fk_left_join", "full",
-      (s: SparkSession, dir: String) => fkLeftJoin(s, dir, tws = false)),
-
-    ("j6_fk_left_tws", "j6_fk_left_join", "full",
-      (s: SparkSession, dir: String) => fkLeftJoin(s, dir, tws = true)),
+      (s: SparkSession, dir: String) => {
+        import s.implicits._
+        val orders = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+        val custs = Tables.customer(s, dir)
+          .filter(col("c_mktsegment") === "BUILDING")
+          .select("c_custkey", "c_name").collect()
+          .zipWithIndex.map { case (r, i) =>
+            Rec(r.getLong(0).toString, r.getString(1), 0L, i + 1L) }.toSeq
+        val base = 1000000L
+        val ordRecs = orders.zipWithIndex.map { case ((ok, ck), i) =>
+          Rec(ok.toString, ck.toString, 0L, base + i + 1L) }.toSeq
+        val streamed = replay2(s, Seq(custs), chunksOf(ordRecs, 3))((r, l) =>
+          FkJoinStream.join(l, r, identity[String], "left").toDF())
+        val out = liveJoinView(s, streamed, "leftKey")
+          .select(col("leftKey").cast("long").as("o_orderkey"),
+            col("rightValue").as("c_name"))
+        (out, SparkEntry.queries("j6_fk_left_join")(s, dir))
+      }),
 
     ("j7_fk_inner_chain", "j7_fk_inner_join", "full",
       (s: SparkSession, dir: String) => {
@@ -1139,28 +1138,6 @@ object StreamVerify {
         .select(col("l_value").cast("long").as("left_id"),
           col("r_value").cast("long").as("right_id")))
     })
-
-  private def fkLeftJoin(s: SparkSession, dir: String,
-                         tws: Boolean): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val orders = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val custs = Tables.customer(s, dir)
-      .filter(col("c_mktsegment") === "BUILDING")
-      .select("c_custkey", "c_name").collect()
-      .zipWithIndex.map { case (r, i) =>
-        Rec(r.getLong(0).toString, r.getString(1), 0L, i + 1L) }.toSeq
-    val base = 1000000L
-    val ordRecs = orders.zipWithIndex.map { case ((ok, ck), i) =>
-      Rec(ok.toString, ck.toString, 0L, base + i + 1L) }.toSeq
-    val streamed = replay2(s, Seq(custs), chunksOf(ordRecs, 3))((r, l) =>
-      (if (tws) FkJoinStreamTws.join(l, r, identity[String], "left")
-       else FkJoinStream.join(l, r, identity[String], "left")).toDF())
-    val out = liveJoinView(s, streamed, "leftKey")
-      .select(col("leftKey").cast("long").as("o_orderkey"),
-        col("rightValue").as("c_name"))
-    (out, SparkEntry.queries("j6_fk_left_join")(s, dir))
-  }
 
   // ---- main ------------------------------------------------------------
 

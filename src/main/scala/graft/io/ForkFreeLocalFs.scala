@@ -5,8 +5,8 @@ import java.nio.file.{FileSystems, Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -62,9 +62,16 @@ class ForkFreeRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
 
 /** `fs.AbstractFileSystem.file.impl`: `.crc`-checksummed like
   * `org.apache.hadoop.fs.local.LocalFs`. Hadoop instantiates it through
-  * the (URI, Configuration) constructor. */
+  * the (URI, Configuration) constructor.
+  *
+  * `FilterFs.open(Path)` hands the read to the raw file system, so
+  * `FileContext.open(path)`, which Spark's checkpoint manager calls,
+  * would skip the `.crc`; here it goes through the verifying open. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeRawLocalFs(conf))
+    extends ChecksumFs(new ForkFreeRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object ForkFreeLocalFs {
 

@@ -72,10 +72,9 @@ object PkJoinStream {
           // State is retained even when both sides are tombstoned: the seq
           // high-water marks ARE the replay guard, and dropping them would
           // re-admit a redelivered pre-tombstone change as fresh. The
-          // retained record is two longs + flags per dead key; production
-          // eviction is state TTL (see the transformWithState twins),
-          // mirroring how compaction eventually drops tombstoned keys in
-          // the reference's changelog topics.
+          // retained record is two longs + flags per dead key. Nothing
+          // evicts it (the operator has no timeout); the reference's
+          // changelog topics drop tombstoned keys at compaction.
           state.update(st)
           out.result().iterator
         })

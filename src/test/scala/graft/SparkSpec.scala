@@ -15,6 +15,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     s
   }
 
+  /** Runs `body` on the RocksDB state store provider, then restores the
+    * session's provider. `transformWithState` needs it: each state
+    * variable is a column family, which the default HDFS-backed
+    * provider rejects. */
+  def withRocksDB[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   override def afterAll(): Unit = {
     // session is shared across suites in one JVM; don't stop it here
     super.afterAll()

@@ -10,8 +10,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException,
-  FileContext, FileStatus, Options, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FSDataInputStream,
+  FileAlreadyExistsException, FileContext, FileStatus, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,12 +123,12 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
       val flipped = Files.readAllBytes(f)
       flipped(1234) = (flipped(1234) ^ 1).toByte
       Files.write(f, flipped)
-      // FileContext.open(Path) goes through FilterFs straight to the raw
-      // file system; the open with a buffer size is the checksummed one
-      intercept[ChecksumException] {
-        val in = fc.open(p, 4096)
-        try in.readAllBytes() finally in.close()
-      }
+      def read(in: FSDataInputStream) = try in.readAllBytes() finally in.close()
+      intercept[ChecksumException](read(fc.open(p, 4096)))
+      // the stock FileContext.open(Path) goes through FilterFs straight
+      // to the raw file system; the fork-free one verifies it too
+      if (stock) assert(read(fc.open(p)).toSeq == flipped.toSeq)
+      else intercept[ChecksumException](read(fc.open(p)))
       bytes
     }
     assert(written.head == written(1))

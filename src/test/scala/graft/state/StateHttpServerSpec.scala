@@ -140,23 +140,18 @@ class StateHttpServerSpec extends SparkSpec {
     import s.implicits._
     implicit val sql = s.sqlContext
     val ckpt = Files.createTempDirectory("graft_http_tws").toString
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.get(provKey, "")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[TypedValue]
-    val q = StreamZScore.anomalies(in.toDS(), windowSize = 3)
-      .writeStream.format("memory").queryName("http_tws_src")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      in.addData(
-        TypedValue("a", 1L, base, 1.5), TypedValue("a", 2L, base + 1, 2.5),
-        TypedValue("b", 3L, base + 2, 10.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      if (prevProv.isEmpty) s.conf.unset(provKey) else s.conf.set(provKey, prevProv)
+    withRocksDB {
+      val in = MemoryStream[TypedValue]
+      val q = StreamZScore.anomalies(in.toDS(), windowSize = 3)
+        .writeStream.format("memory").queryName("http_tws_src")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        in.addData(
+          TypedValue("a", 1L, base, 1.5), TypedValue("a", 2L, base + 1, 2.5),
+          TypedValue("b", 3L, base + 2, 10.0))
+        q.processAllAvailable()
+      } finally q.stop()
     }
 
     val srv = new StateHttpServer(s)
@@ -182,25 +177,20 @@ class StateHttpServerSpec extends SparkSpec {
     import s.implicits._
     implicit val sql = s.sqlContext
     val ckpt = Files.createTempDirectory("graft_http_kl").toString
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.get(provKey, "")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[graft.streaming.StreamKlDrift.TokDoc]
-    val base = Map("the" -> 0.5, "cat" -> 0.25, "sat" -> 0.25)
-    val q = graft.streaming.StreamKlDrift.monitor(in.toDS(), base, oovProb = 1e-6)
-      .writeStream.format("memory").queryName("http_kl_src")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      in.addData(
-        graft.streaming.StreamKlDrift.TokDoc("g1", 1L, 1000L,
-          Seq("the", "cat", "the")),
-        graft.streaming.StreamKlDrift.TokDoc("g2", 2L, 2000L, Seq("sat")))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      if (prevProv.isEmpty) s.conf.unset(provKey) else s.conf.set(provKey, prevProv)
+    withRocksDB {
+      val in = MemoryStream[graft.streaming.StreamKlDrift.TokDoc]
+      val base = Map("the" -> 0.5, "cat" -> 0.25, "sat" -> 0.25)
+      val q = graft.streaming.StreamKlDrift.monitor(in.toDS(), base, oovProb = 1e-6)
+        .writeStream.format("memory").queryName("http_kl_src")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        in.addData(
+          graft.streaming.StreamKlDrift.TokDoc("g1", 1L, 1000L,
+            Seq("the", "cat", "the")),
+          graft.streaming.StreamKlDrift.TokDoc("g2", 2L, 2000L, Seq("sat")))
+        q.processAllAvailable()
+      } finally q.stop()
     }
 
     val srv = new StateHttpServer(s)

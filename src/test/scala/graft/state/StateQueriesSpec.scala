@@ -99,24 +99,19 @@ class StateQueriesSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_tws_state").toString
     // TWS keeps each state variable in its own column family — RocksDB
     // provider only (HDFSBacked rejects multiple column families)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.get(provKey, "")
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[TypedValue]
-    val q = StreamZScore.anomalies(in.toDS(), windowSize = 3)
-      .writeStream.format("memory").queryName("tws_state_src")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      in.addData(
-        TypedValue("a", 1L, base, 1.0), TypedValue("a", 2L, base + 1, 2.0),
-        TypedValue("a", 3L, base + 2, 3.0), TypedValue("a", 4L, base + 3, 4.0),
-        TypedValue("b", 5L, base + 4, 10.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      if (prevProv.isEmpty) s.conf.unset(provKey) else s.conf.set(provKey, prevProv)
+    withRocksDB {
+      val in = MemoryStream[TypedValue]
+      val q = StreamZScore.anomalies(in.toDS(), windowSize = 3)
+        .writeStream.format("memory").queryName("tws_state_src")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        in.addData(
+          TypedValue("a", 1L, base, 1.0), TypedValue("a", 2L, base + 1, 2.0),
+          TypedValue("a", 3L, base + 2, 3.0), TypedValue("a", 4L, base + 3, 4.0),
+          TypedValue("b", 5L, base + 4, 10.0))
+        q.processAllAvailable()
+      } finally q.stop()
     }
 
     // the named ListState variable "buf" (StreamZScore's ring buffer),

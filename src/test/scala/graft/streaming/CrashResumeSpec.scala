@@ -10,36 +10,27 @@ import java.sql.Timestamp
 case class CrDoc(id: Long, text: String, ts: Timestamp)
 case class CrVec(doc_id: Long, vec: Seq[Float], ts: Timestamp)
 
-/** Crash-resume coverage for the stateful streaming twins (VERDICT r13
-  * #5): each query is killed mid-stream and restarted from its
+/** Crash-resume coverage for the stateful streaming operators (VERDICT
+  * r13 #5): each query is killed mid-stream and restarted from its
   * checkpoint, and the union of both legs' outputs must equal an
-  * uninterrupted run — which only holds if the operator's STATE (TWS
-  * value/map/list state, dedup fingerprints, LSH bucket contents)
+  * uninterrupted run — which only holds if the operator's STATE (KTable
+  * values, FK subscriptions, dedup fingerprints, LSH bucket contents)
   * survives the restart rather than being rebuilt empty.
   *
   * MemoryStream offsets count `addData` calls, so the restarted leg
   * re-adds the already-committed batches first (the checkpoint skips
   * them — asserted by checking no duplicate emissions) and then feeds
-  * the post-crash data. RocksDB state store provider throughout, the
-  * transformWithState requirement and the production configuration.
+  * the post-crash data. The KTable and FK join run on the session's
+  * default state store provider, the one `GraftSession` ships; the
+  * dedup and transformWithState cases run on RocksDB.
   */
 class CrashResumeSpec extends SparkSpec {
-
-  private def withRocks[A](body: => A): A = {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-  }
 
   /** Run `build` over `batches` in one leg (no crash) and again split
     * into two legs sharing a checkpoint (crash after `splitAt` batches);
     * returns (uninterrupted rows, resumed rows) as string renderings. */
   private def runBoth[T: Encoder](batches: Seq[Seq[T]], splitAt: Int)(
-      build: Dataset[T] => DataFrame): (Seq[String], Seq[String]) = withRocks {
+      build: Dataset[T] => DataFrame): (Seq[String], Seq[String]) = {
     val s = spark
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     require(splitAt > 0 && splitAt < batches.size, "need a mid-stream split")
@@ -73,50 +64,49 @@ class CrashResumeSpec extends SparkSpec {
     (plain.toSeq, resumed.toSeq)
   }
 
-  /** Two-input variant for the FK join twin. */
+  /** Two-input variant for the FK join. */
   private def runBoth2(left: Seq[Seq[Rec]], right: Seq[Seq[Rec]], splitAt: Int)(
-      build: (Dataset[Rec], Dataset[Rec]) => DataFrame): (Seq[String], Seq[String]) =
-    withRocks {
-      val s = spark
-      import s.implicits._
-      implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
+      build: (Dataset[Rec], Dataset[Rec]) => DataFrame): (Seq[String], Seq[String]) = {
+    val s = spark
+    import s.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      def leg(ckpt: String, nPreload: Int, nFeed: Int,
-              sink: collection.mutable.Buffer[String]): Unit = {
-        val l = MemoryStream[Rec]
-        val r = MemoryStream[Rec]
-        (0 until nPreload).foreach { i =>
+    def leg(ckpt: String, nPreload: Int, nFeed: Int,
+            sink: collection.mutable.Buffer[String]): Unit = {
+      val l = MemoryStream[Rec]
+      val r = MemoryStream[Rec]
+      (0 until nPreload).foreach { i =>
+        if (i < left.size && left(i).nonEmpty) l.addData(left(i))
+        if (i < right.size && right(i).nonEmpty) r.addData(right(i))
+      }
+      val q = build(l.toDS(), r.toDS()).writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val rows = b.collect().map(_.toString)
+          sink.synchronized { sink ++= rows }; ()
+        }
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        (nPreload until nFeed).foreach { i =>
           if (i < left.size && left(i).nonEmpty) l.addData(left(i))
           if (i < right.size && right(i).nonEmpty) r.addData(right(i))
-        }
-        val q = build(l.toDS(), r.toDS()).writeStream
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val rows = b.collect().map(_.toString)
-            sink.synchronized { sink ++= rows }; ()
-          }
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        try {
           q.processAllAvailable()
-          (nPreload until nFeed).foreach { i =>
-            if (i < left.size && left(i).nonEmpty) l.addData(left(i))
-            if (i < right.size && right(i).nonEmpty) r.addData(right(i))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
-
-      val n = math.max(left.size, right.size)
-      val plain = collection.mutable.ArrayBuffer.empty[String]
-      leg(java.nio.file.Files.createTempDirectory("graft_cr2_plain").toString,
-        0, n, plain)
-      val resumed = collection.mutable.ArrayBuffer.empty[String]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_cr2_resume").toString
-      leg(ckpt, 0, splitAt, resumed)
-      leg(ckpt, splitAt, n, resumed)
-      (plain.toSeq, resumed.toSeq)
+        }
+      } finally q.stop()
     }
 
-  test("KTableStreamTws: latest-value state survives a mid-stream restart") {
+    val n = math.max(left.size, right.size)
+    val plain = collection.mutable.ArrayBuffer.empty[String]
+    leg(java.nio.file.Files.createTempDirectory("graft_cr2_plain").toString,
+      0, n, plain)
+    val resumed = collection.mutable.ArrayBuffer.empty[String]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_cr2_resume").toString
+    leg(ckpt, 0, splitAt, resumed)
+    leg(ckpt, splitAt, n, resumed)
+    (plain.toSeq, resumed.toSeq)
+  }
+
+  test("KTableStream: latest-value state survives a mid-stream restart") {
     val s = spark
     import s.implicits._
     val batches = Seq(
@@ -125,14 +115,14 @@ class CrashResumeSpec extends SparkSpec {
       // post-crash: changes must report the PRE-crash values as `old`
       Seq(Rec("k1", "v3", 0L, 4), Rec("k2", null, 0L, 5)))
     val (plain, resumed) = runBoth(batches, splitAt = 2)(in =>
-      KTableStreamTws.changes(in).toDF())
+      KTableStream.changes(in).toDF())
     assert(resumed.sorted == plain.sorted, s"resumed=$resumed plain=$plain")
     // the proof the state carried: v3's change knows old = v2
     assert(plain.exists(_.contains("v3") ), plain)
     assert(resumed.count(_.contains("v2")) == plain.count(_.contains("v2")))
   }
 
-  test("FkJoinStreamTws: subscription + right state survive a restart") {
+  test("FkJoinStream: subscription + right state survive a restart") {
     val left = Seq(
       Seq(Rec("o1", "c1", 0L, 10), Rec("o2", "c2", 0L, 11)),
       Seq.empty[Rec],
@@ -143,7 +133,7 @@ class CrashResumeSpec extends SparkSpec {
       Seq.empty[Rec],
       Seq(Rec("c1", "alpha2", 0L, 3)))
     val (plain, resumed) = runBoth2(left, right, splitAt = 2)((l, r) =>
-      FkJoinStreamTws.join(l, r, identity[String], "left").toDF())
+      FkJoinStream.join(l, r, identity[String], "left").toDF())
     assert(resumed.sorted == plain.sorted, s"resumed=$resumed plain=$plain")
     // o1 (subscribed pre-crash) must re-emit with alpha2 after resume
     assert(resumed.exists(s0 => s0.contains("o1") && s0.contains("alpha2")), resumed)
@@ -157,9 +147,9 @@ class CrashResumeSpec extends SparkSpec {
       Seq(CrDoc(1, "hello world", t0), CrDoc(2, "other text", t0)),
       // post-crash duplicate of a pre-crash fingerprint: must stay dropped
       Seq(CrDoc(3, "HELLO   world", t0), CrDoc(4, "fresh content", t0)))
-    val (plain, resumed) = runBoth(batches, splitAt = 1)(in =>
+    val (plain, resumed) = withRocksDB(runBoth(batches, splitAt = 1)(in =>
       StreamDedup.firstPerFingerprint(in.toDF(), "text", "ts", "10 minutes")
-        .select("id"))
+        .select("id")))
     assert(resumed.sorted == plain.sorted)
     assert(!resumed.exists(_.contains("[3]")), s"duplicate re-admitted: $resumed")
   }
@@ -176,9 +166,9 @@ class CrashResumeSpec extends SparkSpec {
       // post-crash arrival must pair with the PRE-crash stored vector —
       // only possible if the bucket ListState survived the restart
       Seq(CrVec(3, near, t0)))
-    val (plain, resumed) = runBoth(batches, splitAt = 1)(in =>
+    val (plain, resumed) = withRocksDB(runBoth(batches, splitAt = 1)(in =>
       StreamEmbeddingNearDup.pairs(in.toDF(), "doc_id", "vec", "ts",
-        "10 minutes").toDF())
+        "10 minutes").toDF()))
     assert(resumed.sorted == plain.sorted, s"resumed=$resumed plain=$plain")
     assert(resumed.exists(s0 => s0.startsWith("[1,3,")),
       s"cross-crash pair (1,3) missing: $resumed")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.io.{ForkFreeLocalFileSystem, ForkFreeLocalFs, ForkFreeRawLocalFileSystem}
-import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, FileContext, FileSystem, LocalFileSystem}
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -90,5 +90,22 @@ class ForkFreeCheckpointSpec extends SparkSpec {
     assert(resumed.sortBy(_.seq) == plain.sortBy(_.seq))
     // state carried across the switch: k1's v3 change knows the old v2
     assert(resumed.contains(Change("k1", "v3", "v2", 4)), resumed)
+  }
+
+  test("a flipped byte in an offsets file fails the restart with a ChecksumException") {
+    val ckpt = Files.createTempDirectory("graft_ffs_flip")
+    leg(ckpt.toString, batches.take(2), 0)
+    // the last offsets file ends with the source offset ("1"); as "0" it
+    // still parses, and an unchecked read would resume from the wrong batch
+    val offsets = ckpt.resolve("offsets")
+    val latest = files(offsets).filterNot(_.startsWith(".")).maxBy(_.toLong)
+    val f = offsets.resolve(latest)
+    val bytes = Files.readAllBytes(f)
+    val i = bytes.lastIndexWhere(b => b >= '0' && b <= '9')
+    bytes(i) = (bytes(i) ^ 1).toByte
+    Files.write(f, bytes)
+    val e = intercept[Exception](leg(ckpt.toString, batches, preload = 2))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[ChecksumException]), causes.mkString("\n"))
   }
 }

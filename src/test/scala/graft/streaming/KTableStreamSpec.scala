@@ -20,12 +20,17 @@ class KTableStreamSpec extends SparkSpec {
       // second batch: state must remember v2
       in.addData(Rec("key1", null, 0L, 3), Rec("key2", "x", 0L, 4))
       q.processAllAvailable()
+      // third batch: a re-insert after the tombstone has no old value,
+      // and changes drops a null key itself
+      in.addData(Rec(null, "dropped", 0L, 5), Rec("key1", "c", 0L, 6))
+      q.processAllAvailable()
       val changes = s.table("ktable_out").as[Change].collect().sortBy(_.seq).toList
       assert(changes == List(
         Change("key1", "v1", null, 1),
         Change("key1", "v2", "v1", 2),
         Change("key1", null, "v2", 3),
-        Change("key2", "x", null, 4)))
+        Change("key2", "x", null, 4),
+        Change("key1", "c", null, 6)))
     } finally q.stop()
   }
 

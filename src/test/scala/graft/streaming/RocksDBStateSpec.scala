@@ -14,10 +14,7 @@ class RocksDBStateSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val in = MemoryStream[Rec]
       val q = KTableStream.changes(in.toDS())
         .writeStream.format("memory").queryName("rocks_out").outputMode("append").start()
@@ -32,11 +29,6 @@ class RocksDBStateSpec extends SparkSpec {
           Change("k1", "v2", "v1", 2),
           Change("k2", null, null, 3)))
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

@@ -11,16 +11,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class StreamAttributionSpec extends SparkSpec {
 
   private def run(batches: Seq[Seq[ActivityEvent]],
-                  lookbackSec: Long = 604800L): Seq[Attribution] = {
+                  lookbackSec: Long = 604800L): Seq[Attribution] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    // transformWithState needs a multi-column-family store (RocksDB);
-    // set per-query and restore after (the KTableStreamTwsSpec pattern)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[ActivityEvent]
     val name = s"sattr${System.nanoTime()}"
     val q = StreamAttribution.lastTouch(in.toDS(), lookbackSec)
@@ -28,10 +22,7 @@ class StreamAttributionSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[Attribution].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("credits the latest preceding source; purchases never shift the state") {

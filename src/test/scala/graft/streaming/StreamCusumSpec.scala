@@ -10,14 +10,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class StreamCusumSpec extends SparkSpec {
 
   private def run(batches: Seq[Seq[Point]], params: Map[String, (Double, Double)],
-                  threshold: Double = 5.0): Seq[CusumPoint] = {
+                  threshold: Double = 5.0): Seq[CusumPoint] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Point]
     val name = s"scs${System.nanoTime()}"
     val q = StreamCusum.monitor(in.toDS(), params, threshold)
@@ -25,10 +21,7 @@ class StreamCusumSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[CusumPoint].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("multi-batch stream reproduces the batch x65 series EXACTLY") {

@@ -39,14 +39,10 @@ class StreamEmbeddingNearDupSpec extends SparkSpec {
     } yield (a.doc_id, b.doc_id)).toSet
   }
 
-  private def run(batches: Seq[Seq[Vec]]): Seq[VecPair] = {
+  private def run(batches: Seq[Seq[Vec]]): Seq[VecPair] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Vec]
     val name = s"svecdup${System.nanoTime()}"
     val q = StreamEmbeddingNearDup.pairs(in.toDF(), "doc_id", "embedding",
@@ -55,10 +51,7 @@ class StreamEmbeddingNearDupSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[VecPair].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   /** Unit vector from a seed; `jitter` rotates it slightly (cosine stays

@@ -9,14 +9,10 @@ import org.apache.spark.sql.functions._
   * counts, strict-ordering fixtures, and cross-batch state carry. */
 class StreamFunnelSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[FunnelEvent]]): Seq[StageReached] = {
+  private def run(batches: Seq[Seq[FunnelEvent]]): Seq[StageReached] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[FunnelEvent]
     val name = s"sfn${System.nanoTime()}"
     val q = StreamFunnel.stages(in.toDS())
@@ -24,10 +20,7 @@ class StreamFunnelSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[StageReached].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("ordered multi-batch replay of the harness events == batch x43 stage counts") {

@@ -29,14 +29,10 @@ class StreamImageNearDupSpec extends SparkSpec {
   }
 
   private def run(batches: Seq[Seq[Img]], horizon: String,
-                  maxDist: Int): Seq[ImagePair] = {
+                  maxDist: Int): Seq[ImagePair] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Img]
     val name = s"simgdup${System.nanoTime()}"
     val q = StreamImageNearDup.pairs(in.toDF(), "doc_id", "content", "ets",
@@ -45,10 +41,7 @@ class StreamImageNearDupSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[ImagePair].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("distinct stream pairs ≡ batch nearDupImagePairs on in-horizon data") {

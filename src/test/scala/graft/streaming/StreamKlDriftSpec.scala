@@ -10,14 +10,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class StreamKlDriftSpec extends SparkSpec {
 
   private def run(batches: Seq[Seq[TokDoc]], baseline: Map[String, Double],
-                  oovProb: Double, threshold: Double = 0.5): Seq[KlPoint] = {
+                  oovProb: Double, threshold: Double = 0.5): Seq[KlPoint] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[TokDoc]
     val name = s"skl${System.nanoTime()}"
     val q = StreamKlDrift.monitor(in.toDS(), baseline, oovProb, threshold)
@@ -25,10 +21,7 @@ class StreamKlDriftSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[KlPoint].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   private def toks(t: String): Seq[String] =
@@ -83,10 +76,6 @@ class StreamKlDriftSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_kl_restart").toString
     val base = baselineOf(Seq("the cat sat on the mat", "the dog sat"))
     val d1 = TokDoc("g", 1L, 1000L, toks("the cat sat"))
@@ -110,7 +99,7 @@ class StreamKlDriftSpec extends SparkSpec {
         .option("checkpointLocation", ckpt).outputMode("append").start()
       try { docs.foreach(in.addData(_)); q.processAllAvailable() } finally q.stop()
     }
-    try {
+    withRocksDB {
       leg(Seq(d1))
       leg(Seq(d1, d2)) // fresh query, SAME checkpoint: counts carry over
       val got = StreamKlDriftSpec.collected.synchronized {
@@ -127,8 +116,6 @@ class StreamKlDriftSpec extends SparkSpec {
       }
       assert(got.map(p => (p.seq_id, p.n_tokens, p.kl)).toSeq == want)
       assert(got(1).n_tokens == 8L) // 3 + 5: leg-1 state carried over
-    } finally {
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
     }
   }
 

@@ -17,14 +17,10 @@ class StreamNearDupSpec extends SparkSpec {
   private def ts(off: Long) = new Timestamp((base + off) * 1000)
   case class Doc(doc_id: Long, text: String, ets: Timestamp)
 
-  private def run(batches: Seq[Seq[Doc]], horizon: String): Set[(Long, Long)] = {
+  private def run(batches: Seq[Seq[Doc]], horizon: String): Set[(Long, Long)] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Doc]
     val name = s"sneardup${System.nanoTime()}"
     val q = StreamNearDup.candidatePairs(in.toDF(), "doc_id", "text", "ets", horizon)
@@ -32,10 +28,7 @@ class StreamNearDupSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[CandidatePair].collect().map(p => (p.a, p.b)).toSet
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   // near-dup family (one token changed), plus unrelated docs
@@ -70,28 +63,23 @@ class StreamNearDupSpec extends SparkSpec {
         (1 to 12).map(i => r.getLong(i)).toVector).toMap
     // re-run the stream keeping scores this time
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Doc]
-    val q = StreamNearDup.candidatePairs(in.toDF(), "doc_id", "text", "ets", "10 minutes")
-      .writeStream.format("memory").queryName("sndscore").outputMode("append").start()
-    try {
-      in.addData(docs); q.processAllAvailable()
-      val got = s.table("sndscore").as[CandidatePair].collect()
-      assert(got.nonEmpty)
-      got.foreach { p =>
-        val want = sigs(p.a).zip(sigs(p.b)).count { case (x, y) => x == y } / 12.0
-        assert(p.est_jaccard == want, s"(${p.a},${p.b}): ${p.est_jaccard} vs $want")
-      }
-      // the true near-dup family scores high; it must beat any
-      // incidental low-overlap pair
-      val fam = got.filter(p => Set(p.a, p.b).subsetOf(Set(1L, 2L, 3L)))
-      assert(fam.nonEmpty && fam.forall(_.est_jaccard >= 0.5), got.toSeq)
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
+    withRocksDB {
+      val in = MemoryStream[Doc]
+      val q = StreamNearDup.candidatePairs(in.toDF(), "doc_id", "text", "ets", "10 minutes")
+        .writeStream.format("memory").queryName("sndscore").outputMode("append").start()
+      try {
+        in.addData(docs); q.processAllAvailable()
+        val got = s.table("sndscore").as[CandidatePair].collect()
+        assert(got.nonEmpty)
+        got.foreach { p =>
+          val want = sigs(p.a).zip(sigs(p.b)).count { case (x, y) => x == y } / 12.0
+          assert(p.est_jaccard == want, s"(${p.a},${p.b}): ${p.est_jaccard} vs $want")
+        }
+        // the true near-dup family scores high; it must beat any
+        // incidental low-overlap pair
+        val fam = got.filter(p => Set(p.a, p.b).subsetOf(Set(1L, 2L, 3L)))
+        assert(fam.nonEmpty && fam.forall(_.est_jaccard >= 0.5), got.toSeq)
+      } finally q.stop()
     }
   }
 

@@ -11,14 +11,10 @@ class StreamOverWindowSpec extends SparkSpec {
 
   import StreamOverWindow.FrameAgg
 
-  private def drive(batches: Seq[Seq[(Long, Long, Long, Long)]]): Seq[FrameAgg] = {
+  private def drive(batches: Seq[Seq[(Long, Long, Long, Long)]]): Seq[FrameAgg] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[(Long, Long, Long, Long)]
     val name = s"ow${System.nanoTime()}"
     val q = StreamOverWindow.rollingTotals(in.toDS())
@@ -26,10 +22,7 @@ class StreamOverWindowSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[FrameAgg].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("frame fixture: peers, horizon edge, eviction") {
@@ -48,10 +41,6 @@ class StreamOverWindowSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ow_restart").toString
     StreamOverWindowSpec.collected.clear()
     def leg(adds: Seq[Seq[(Long, Long, Long, Long)]]): Unit = {
@@ -67,7 +56,7 @@ class StreamOverWindowSpec extends SparkSpec {
       try { adds.foreach { b => in.addData(b); q.processAllAvailable() } }
       finally q.stop()
     }
-    try {
+    withRocksDB {
       val first = Seq((1L, 1L, 1000L, 10L))
       leg(Seq(first))
       // restart: the committed batch replays (skipped), the new event's
@@ -79,8 +68,6 @@ class StreamOverWindowSpec extends SparkSpec {
       assert(got == List(
         FrameAgg(1L, 1L, 1000L, 1L, 10L),
         FrameAgg(1L, 2L, 2000L, 2L, 15L)))
-    } finally {
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
     }
   }
 

@@ -140,18 +140,11 @@ class StreamPlanGuardSpec extends SparkSpec {
   }
 
   test("StreamQuota is one TransformWithState hop") {
-    // transformWithState needs the RocksDB provider (column families)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key, "")
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val p = microPlan(Seq(StreamQuota.Arrival("s", 1L, 1L)))(in =>
         StreamQuota.admit(in, cap = 3).toDF())
       assert(count(p, "TransformWithState") == 1, p.toString)
       assert(count(p, "ShuffleExchange") == 1, p.toString)
-    } finally {
-      if (prev.nonEmpty) spark.conf.set(key, prev) else spark.conf.unset(key)
     }
   }
 

@@ -11,14 +11,10 @@ import org.apache.spark.sql.functions._
   * binds per source, not globally. */
 class StreamQuotaSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[Arrival]], cap: Int): Seq[Admitted] = {
+  private def run(batches: Seq[Seq[Arrival]], cap: Int): Seq[Admitted] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Arrival]
     val name = s"sq${System.nanoTime()}"
     val q = StreamQuota.admit(in.toDS(), cap)
@@ -26,10 +22,7 @@ class StreamQuotaSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[Admitted].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   /** The batch statement of the rule: row_number over (ts, doc_id) per

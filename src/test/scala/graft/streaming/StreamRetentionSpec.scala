@@ -11,14 +11,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * cell a user contributed. */
 class StreamRetentionSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[UserWeek]]): Seq[CellDelta] = {
+  private def run(batches: Seq[Seq[UserWeek]]): Seq[CellDelta] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[UserWeek]
     val name = s"sret${System.nanoTime()}"
     val q = StreamRetention.cellDeltas(in.toDS())
@@ -26,10 +22,7 @@ class StreamRetentionSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[CellDelta].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   private def fold(ds: Seq[CellDelta]): Map[(Long, Long), Long] =
@@ -62,10 +55,6 @@ class StreamRetentionSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ret_restart").toString
     StreamRetentionSpec.collected.clear()
     def leg(adds: Seq[Seq[UserWeek]]): Unit = {
@@ -81,7 +70,7 @@ class StreamRetentionSpec extends SparkSpec {
       try { adds.foreach { b => in.addData(b); q.processAllAvailable() } }
       finally q.stop()
     }
-    try {
+    withRocksDB {
       val first = Seq(UserWeek(1, 5), UserWeek(1, 7))
       leg(Seq(first))
       // restart: the committed batch replays (skipped); the late week-3
@@ -93,8 +82,6 @@ class StreamRetentionSpec extends SparkSpec {
         StreamRetentionSpec.collected.toList }
       assert(got.count(_.delta == -1L) == 2, s"expected 2 retractions: $got")
       assert(fold(got) == Map((3L, 0L) -> 1L, (3L, 2L) -> 1L, (3L, 4L) -> 1L))
-    } finally {
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
     }
   }
 

@@ -17,14 +17,10 @@ class StreamTemporalJoinSpec extends SparkSpec {
   /** Drive batches of (dims, events); a far-future dim sentinel (emits
     * nothing) closes the watermark so every buffered event drains. */
   private def drive(batches: Seq[(Seq[Rec], Seq[Rec])],
-                    delay: String = "5 seconds"): List[TemporalJoined] = {
+                    delay: String = "5 seconds"): List[TemporalJoined] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val dims = MemoryStream[Rec]
     val events = MemoryStream[Rec]
     val name = s"tj${System.nanoTime()}"
@@ -44,10 +40,7 @@ class StreamTemporalJoinSpec extends SparkSpec {
       q.processAllAvailable()
       s.table(name).as[TemporalJoined].collect().toList
         .sortBy(t => (t.key, t.event_ts, t.event_seq))
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   /** The as-of rule, replayed directly: latest dim (ts, seq) <= event ts. */
@@ -108,10 +101,6 @@ class StreamTemporalJoinSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_tj_restart").toString
     StreamTemporalJoinSpec.collected.clear()
     // memory sinks refuse checkpoint recovery; foreachBatch resumes. A
@@ -137,7 +126,7 @@ class StreamTemporalJoinSpec extends SparkSpec {
         }
       } finally q.stop()
     }
-    try {
+    withRocksDB {
       val v1 = Seq(Rec("k", "v1", 1000, 1))
       val e1 = Seq(Rec("k", "order", 5000, 10))
       leg(Seq((v1, Nil), (Nil, e1))) // e1 buffers; nothing emitted yet
@@ -154,8 +143,6 @@ class StreamTemporalJoinSpec extends SparkSpec {
       // restarted-from-zero operator would have lost the buffer (no
       // row) or the version list (v1/null instead of v2)
       assert(got == List(TemporalJoined("k", "order", 5000, 10, "v2", 4000)))
-    } finally {
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
     }
   }
 

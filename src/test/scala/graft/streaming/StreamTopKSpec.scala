@@ -10,14 +10,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * re-feeds the board. */
 class StreamTopKSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[UserEvent]], k: Int): Seq[RankedEntry] = {
+  private def run(batches: Seq[Seq[UserEvent]], k: Int): Seq[RankedEntry] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[UserEvent]
     val name = s"stopk${System.nanoTime()}"
     val q = StreamTopK.topK(in.toDS(), k)
@@ -25,10 +21,7 @@ class StreamTopKSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[RankedEntry].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   /** The batch contract: top-k of per-user micro-cent totals under

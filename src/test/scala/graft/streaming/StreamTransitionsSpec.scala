@@ -9,14 +9,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * window shape replayed in memory. */
 class StreamTransitionsSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[UserEvent]]): Seq[Transition] = {
+  private def run(batches: Seq[Seq[UserEvent]]): Seq[Transition] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[UserEvent]
     val name = s"strans${System.nanoTime()}"
     val q = StreamTransitions.transitions(in.toDS())
@@ -24,10 +20,7 @@ class StreamTransitionsSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[Transition].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   test("pairs chain across batches; the first event of a user emits nothing") {

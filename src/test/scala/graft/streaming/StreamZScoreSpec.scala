@@ -10,14 +10,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class StreamZScoreSpec extends SparkSpec {
 
   private def run(batches: Seq[Seq[TypedValue]], window: Int = 20,
-                  threshold: Double = 3.0): Seq[Anomaly] = {
+                  threshold: Double = 3.0): Seq[Anomaly] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[TypedValue]
     val name = s"szs${System.nanoTime()}"
     val q = StreamZScore.anomalies(in.toDS(), window, threshold)
@@ -25,10 +21,7 @@ class StreamZScoreSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
       s.table(name).as[Anomaly].collect().toSeq
-    } finally {
-      q.stop()
-      if (prev.nonEmpty) s.conf.set(key, prev) else s.conf.unset(key)
-    }
+    } finally q.stop()
   }
 
   private def ev(t: String, id: Long, v: Double) = TypedValue(t, id, id * 10, v)

@@ -12,27 +12,19 @@ class TimerWindowsSpec extends SparkSpec {
 
   import TimerWindows.WindowCount
 
-  private def drive(feed: Seq[Rec]): List[WindowCount] = {
+  private def drive(feed: Seq[Rec]): List[WindowCount] = withRocksDB {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val prev = s.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val in = MemoryStream[Rec]
+    val q = TimerWindows.tumblingCountsOnClose(in.toDS(), 10000L, "0 seconds")
+      .writeStream.format("memory").queryName("timer_win")
+      .outputMode("append").start()
     try {
-      val in = MemoryStream[Rec]
-      val q = TimerWindows.tumblingCountsOnClose(in.toDS(), 10000L, "0 seconds")
-        .writeStream.format("memory").queryName("timer_win")
-        .outputMode("append").start()
-      try {
-        feed.foreach { r => in.addData(r); q.processAllAvailable() }
-        s.table("timer_win").as[WindowCount].collect()
-          .sortBy(w => (w.win_start, w.key)).toList
-      } finally q.stop()
-    } finally {
-      if (prev.nonEmpty) s.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-      else s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+      feed.foreach { r => in.addData(r); q.processAllAvailable() }
+      s.table("timer_win").as[WindowCount].collect()
+        .sortBy(w => (w.win_start, w.key)).toList
+    } finally q.stop()
   }
 
   test("one emission per window, only at close; open windows stay silent") {
