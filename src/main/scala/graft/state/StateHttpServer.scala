@@ -29,26 +29,36 @@ import java.nio.charset.StandardCharsets
   * degenerates honestly (routing off: every key local by construction).
   *
   * Rows are rendered as a JSON array via Spark's own row-JSON encoder, so
-  * any state schema is servable without bean classes.
+  * any state schema is servable without bean classes. A body lists its
+  * rows ordered by (key as a string, row json), in UTF-8 byte order.
   *
-  * Responses are BOUNDED: at most `maxRows` rows are pulled to the driver
-  * per request (via `toLocalIterator`, one partition resident at a time —
-  * never a whole-store `collect`). Clients page with `?limit=N&offset=M`;
-  * a truncated response carries `X-Graft-Truncated: true` and the next
-  * offset in `X-Graft-Next-Offset`, keeping the body a plain JSON array
-  * so reference clients parse it unchanged.
+  * Lookups are served from a per-store REPLICA: the first request reads
+  * the whole view once in Spark, rendering every row there, and keeps the
+  * rendered slice on the driver, sorted; later requests binary-search it
+  * and start no Spark job. The view's closure is still called on every
+  * request, and the replica is reused only while that evaluation resolves
+  * to the same plan and the same committed state batch (the version rule
+  * in [[StateReplica.versionOf]]); a new commit rebuilds it at the next
+  * request. So a replica holds the store's slice on the driver, one
+  * version at a time per store; size the state behind a server for it.
+  * A view that cannot be reused (a parquet table, a memory sink, a typed
+  * lambda) is read for each request with the request's predicate pushed
+  * into the read, and the rows it returns are sorted and paged on the
+  * driver the same way.
+  *
+  * Responses are BOUNDED: at most `maxRows` rows per response. Clients
+  * page with `?limit=N&offset=M`; a truncated response carries
+  * `X-Graft-Truncated: true` and the next offset in
+  * `X-Graft-Next-Offset`, keeping the body a plain JSON array so
+  * reference clients parse it unchanged. `GET /state/metrics` reports,
+  * per store, the state batch ids served, the replica's rows, builds and
+  * last build time, and how many requests the replica answered against
+  * how many were re-read.
   */
 class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
                       maxRows: Int = 10000) {
 
-  /** A queryable store: a (lazy) flattened state view + which of its
-    * columns is the logical key and (for windowed stores) the window
-    * start. `stateDf` is re-evaluated per request so reads see the
-    * latest committed checkpoint batch. */
-  private case class StoreConfig(stateDf: () => DataFrame, keyCol: String,
-                                 winStartCol: Option[String])
-
-  private val stores = scala.collection.concurrent.TrieMap.empty[String, StoreConfig]
+  private val stores = scala.collection.concurrent.TrieMap.empty[String, ServedStore]
   private var server: HttpServer = _
   private var boundPort: Int = bindPort
 
@@ -125,10 +135,13 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
   }
 
   /** Register with an arbitrary state view — e.g. a projection of
-    * [[StateQueries.flattened]] with friendlier column names. */
+    * [[StateQueries.flattened]] with friendlier column names. `stateDf`
+    * is evaluated on every request, so reads see the latest committed
+    * checkpoint batch; `keyCol` is the logical key and `winStartCol` (for
+    * windowed stores) the window start. */
   def registerView(name: String, stateDf: () => DataFrame, keyCol: String,
                    winStartCol: Option[String] = None): this.type = {
-    stores.put(name, StoreConfig(stateDf, keyCol, winStartCol))
+    stores.put(name, new ServedStore(stateDf, keyCol, winStartCol))
     this
   }
 
@@ -164,6 +177,7 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
   def stop(): Unit = {
     if (server != null) server.stop(0)
     if (pool != null) pool.shutdown()
+    stores.values.foreach(_.release())
   }
 
   /** The key a path addresses, when it is key-addressed (point lookup or
@@ -266,28 +280,28 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
   private def segments(path: String): List[String] =
     path.stripPrefix("/").split("/").toList.map(p => URLDecoder.decode(p, "UTF-8"))
 
+  /** The four lookups, each answered from the store's replica or, for a
+    * view that cannot be reused, from a read with the lookup's predicate. */
   private def route(path: String, page: Page): Option[RenderedPage] =
     segments(path) match {
       case "state" :: "keyvalue" :: store :: key :: Nil =>
-        stores.get(store).map { cfg =>
-          toJsonArray(
-            StateQueries.point(cfg.stateDf(), col(cfg.keyCol).cast("string") === key),
-            cfg.keyCol, page)
+        stores.get(store).map { st =>
+          st.serve(_.point(key, page))(
+            StateQueries.point(_, col(st.keyCol).cast("string") === key))
         }
       case "state" :: "keyvalues" :: store :: "all" :: Nil =>
-        stores.get(store).map(cfg =>
-          toJsonArray(StateQueries.all(cfg.stateDf()), cfg.keyCol, page))
+        stores.get(store).map(_.serve(_.all(page))(StateQueries.all))
       case "state" :: "keyvalues" :: store :: "range" :: from :: to :: Nil =>
-        stores.get(store).map { cfg =>
-          toJsonArray(
-            StateQueries.range(cfg.stateDf(), col(cfg.keyCol).cast("string"), from, to),
-            cfg.keyCol, page)
+        stores.get(store).map { st =>
+          st.serve(_.range(from, to, page))(
+            StateQueries.range(_, col(st.keyCol).cast("string"), from, to))
         }
       case "state" :: "windowed" :: store :: key :: from :: to :: Nil =>
-        stores.get(store).flatMap { cfg =>
-          cfg.winStartCol.map { ws =>
-            toJsonArray(StateQueries.windowedFetch(cfg.stateDf(), col(cfg.keyCol),
-              col(ws), key, from.toLong, to.toLong), cfg.keyCol, page)
+        stores.get(store).flatMap { st =>
+          st.winStartCol.map { ws =>
+            val (fromSec, toSec) = (from.toLong, to.toLong)
+            st.serve(_.windowed(key, fromSec, toSec, page))(
+              StateQueries.windowedFetch(_, col(st.keyCol), col(ws), key, fromSec, toSec))
           }
         }
       case _ => None
@@ -321,27 +335,11 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
           val (h, pt) = ring(ownerOf(key))
           s"""{"host":${quote(h)},"port":$pt,"store":${quote(store)},"key":${quote(key)}}"""
         }
+      case "state" :: "metrics" :: Nil =>
+        Some(stores.toSeq.sortBy(_._1).map { case (n, st) => st.metricsJson(n, quote) }
+          .mkString("""{"stores":[""", ",", "]}"))
       case _ => None
     }
-  }
-
-  /** Deterministic bounded rendering: rows sorted by (key, full JSON) so
-    * pages are stable across partitionings and re-reads, then the page's
-    * `offset`/`limit` pushed into the plan — Spark executes a bounded
-    * take over the sort, never a whole-store collect. One extra row past
-    * the limit probes for truncation and is not rendered. */
-  private def toJsonArray(df: DataFrame, keyCol: String, page: Page): RenderedPage = {
-    val json = df
-      .select(col(keyCol).cast("string").as("__k"),
-        to_json(struct(df.columns.map(col): _*)).as("__j"))
-      .orderBy("__k", "__j")
-      .select("__j")
-      .offset(page.offset)
-      .limit(page.limit + 1)
-    val it = json.toLocalIterator()
-    val rows = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext && rows.length < page.limit) rows += it.next().getString(0)
-    RenderedPage(rows.mkString("[", ",", "]"), rows.length, truncated = it.hasNext)
   }
 
   private def quote(s: String): String =

@@ -114,6 +114,9 @@ object StateQueries {
                     key: Any, fromSec: Long, toSec: Long): DataFrame =
     state.filter(keyCol === lit(key) &&
         winStartCol.cast("long").between(fromSec, toSec))
-      .withColumn("rendered_key",
-        concat(keyCol.cast("string"), lit("@"), winStartCol.cast("long").cast("string")))
+      .withColumn("rendered_key", renderedKey(keyCol, winStartCol))
+
+  /** The reference's `"$key@$windowStart"` rendering of a window row. */
+  def renderedKey(keyCol: Column, winStartCol: Column): Column =
+    concat(keyCol.cast("string"), lit("@"), winStartCol.cast("long").cast("string"))
 }
