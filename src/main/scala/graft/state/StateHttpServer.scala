@@ -32,33 +32,38 @@ import java.nio.charset.StandardCharsets
   * any state schema is servable without bean classes. A body lists its
   * rows ordered by (key as a string, row json), in UTF-8 byte order.
   *
-  * Lookups are served from a per-store REPLICA: the first request reads
-  * the whole view once in Spark, rendering every row there, and keeps the
-  * rendered slice on the driver, sorted; later requests binary-search it
-  * and start no Spark job. The view's closure is still called on every
-  * request, and the replica is reused only while that evaluation resolves
-  * to the same plan and the same committed state batch (the version rule
-  * in [[StateReplica.versionOf]]); a new commit rebuilds it at the next
-  * request. So a replica holds the store's slice on the driver, one
-  * version at a time per store; size the state behind a server for it.
-  * A view that cannot be reused (a parquet table, a memory sink, a typed
-  * lambda) is read for each request with the request's predicate pushed
-  * into the read, and the rows it returns are sorted and paged on the
-  * driver the same way.
+  * Lookups are served from a per-store REPLICA once the store is asked
+  * often enough: the view is read once in Spark, every row rendered there,
+  * and the rendered slice is kept on the driver, sorted; later requests
+  * binary-search it and start no Spark job. The view's closure is still
+  * called on every request, and the replica is reused only while that
+  * evaluation resolves to the same plan and the same committed state
+  * batch (the version rule in [[StateReplica.versionOf]]). Until a
+  * version's requests have spent as long on their own reads as the
+  * store's last build took, and for a view that cannot be reused (a
+  * parquet table, a memory sink, a typed lambda), a request is read in
+  * Spark with its predicate and its page's offset and limit pushed into
+  * a sorted read, so at most `offset + limit + 1` rows reach the driver.
+  * So a replica holds the store's slice on the driver, one version at a
+  * time per store; the replicas of one server hold at most a quarter of
+  * the driver's maximum heap together, and a store that would not fit is
+  * read per request instead.
   *
   * Responses are BOUNDED: at most `maxRows` rows per response. Clients
   * page with `?limit=N&offset=M`; a truncated response carries
   * `X-Graft-Truncated: true` and the next offset in
   * `X-Graft-Next-Offset`, keeping the body a plain JSON array so
   * reference clients parse it unchanged. `GET /state/metrics` reports,
-  * per store, the state batch ids served, the replica's rows, builds and
-  * last build time, and how many requests the replica answered against
-  * how many were re-read.
+  * per store, the state batch ids served, the replica's rows, builds,
+  * builds dropped over the heap budget and last build time, and how many
+  * requests the replica answered against how many were re-read.
   */
 class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
                       maxRows: Int = 10000) {
 
   private val stores = scala.collection.concurrent.TrieMap.empty[String, ServedStore]
+  /** The driver heap this server's replicas share. */
+  private[state] val replicaBudget = ReplicaBudget.ofHeap()
   private var server: HttpServer = _
   private var boundPort: Int = bindPort
 
@@ -141,7 +146,7 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
     * windowed stores) the window start. */
   def registerView(name: String, stateDf: () => DataFrame, keyCol: String,
                    winStartCol: Option[String] = None): this.type = {
-    stores.put(name, new ServedStore(stateDf, keyCol, winStartCol))
+    stores.put(name, new ServedStore(stateDf, keyCol, winStartCol, replicaBudget)).foreach(_.release())
     this
   }
 
@@ -280,28 +285,29 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
   private def segments(path: String): List[String] =
     path.stripPrefix("/").split("/").toList.map(p => URLDecoder.decode(p, "UTF-8"))
 
-  /** The four lookups, each answered from the store's replica or, for a
-    * view that cannot be reused, from a read with the lookup's predicate. */
+  /** The four lookups, each answered from the store's replica or by a
+    * read of one page of the rows the lookup's filter keeps. */
   private def route(path: String, page: Page): Option[RenderedPage] =
     segments(path) match {
       case "state" :: "keyvalue" :: store :: key :: Nil =>
         stores.get(store).map { st =>
-          st.serve(_.point(key, page))(
+          st.serve(page)(_.point(key, page))(
             StateQueries.point(_, col(st.keyCol).cast("string") === key))
         }
       case "state" :: "keyvalues" :: store :: "all" :: Nil =>
-        stores.get(store).map(_.serve(_.all(page))(StateQueries.all))
+        stores.get(store).map(_.serve(page)(_.all(page))(StateQueries.all))
       case "state" :: "keyvalues" :: store :: "range" :: from :: to :: Nil =>
         stores.get(store).map { st =>
-          st.serve(_.range(from, to, page))(
+          st.serve(page)(_.range(from, to, page))(
             StateQueries.range(_, col(st.keyCol).cast("string"), from, to))
         }
       case "state" :: "windowed" :: store :: key :: from :: to :: Nil =>
         stores.get(store).flatMap { st =>
           st.winStartCol.map { ws =>
             val (fromSec, toSec) = (from.toLong, to.toLong)
-            st.serve(_.windowed(key, fromSec, toSec, page))(
-              StateQueries.windowedFetch(_, col(st.keyCol), col(ws), key, fromSec, toSec))
+            // the key is matched as a string, as the replica and the point lookup match it
+            st.serve(page)(_.windowed(key, fromSec, toSec, page))(
+              StateQueries.windowedFetch(_, col(st.keyCol).cast("string"), col(ws), key, fromSec, toSec))
           }
         }
       case _ => None

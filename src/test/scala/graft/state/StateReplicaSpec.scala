@@ -15,12 +15,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.io.Source
 import scala.jdk.CollectionConverters._
 
-/** `StateHttpServer`'s per-commit replica: lookups after the first on an
+/** `StateHttpServer`'s per-commit replica: once built, lookups on an
   * unchanged checkpoint start no Spark job, a new commit shows on the next
-  * request, views that cannot be reused are re-read, concurrent first
-  * requests build once, and every body and paging header equals what the
-  * former in-Spark rendering (`to_json` → `orderBy(key, json)` →
-  * `offset`/`limit + 1`, kept below as the oracle) produced. */
+  * request, views that cannot be reused are re-read, concurrent requests
+  * build once, a replica is never replaced by an earlier commit's, a store
+  * over the heap budget is paged by per-request reads, and every body and
+  * paging header equals what the former in-Spark rendering (`to_json` →
+  * `orderBy(key, json)` → `offset`/`limit + 1`, kept below as the oracle)
+  * produced. */
 class StateReplicaSpec extends SparkSpec {
 
   private val base = 1700000000L
@@ -171,15 +173,19 @@ class StateReplicaSpec extends SparkSpec {
         ("b", "a"), ("alpha", "alpha")).map { case (f, t) => Range(f, t) } ++
       ks.flatMap(k => Seq(Windowed(k, base, base + 100), Windowed(k, base + 10, base + 10)))
 
-  test("after the first GET, lookups on an unchanged checkpoint start no Spark job") {
+  test("a version's first GET is read, the second builds the replica, later ones start no Spark job") {
     val (_, view) = windowedCheckpoint("graft_replica_jobs",
       Seq(Ev("hmida", ts(0)), Ev("hmida", ts(1)), Ev("lambda", ts(11)), Ev("hmida", ts(12))))
     val srv = new StateHttpServer(spark)
       .registerView("w", view, keyCol = "key", winStartCol = Some("win_start"))
     val port = srv.start()
     try {
-      val first = jobsDuring(assert(get(port, "/state/keyvalue/w/hmida")._1 == 200))
-      assert(first >= 1, "the first lookup reads the store")
+      Seq(1, 2).foreach { i =>
+        val jobs = jobsDuring(assert(get(port, "/state/keyvalue/w/hmida")._1 == 200))
+        assert(jobs >= 1, s"lookup $i reads the store")
+      }
+      val m0 = metrics(port)("w")
+      assert(m0.get("served_by_reread").asLong == 1 && m0.get("replica_builds").asLong == 1, m0)
       val paths = Seq("/state/keyvalue/w/hmida", "/state/keyvalue/w/lambda",
         "/state/keyvalues/w/all", "/state/keyvalues/w/range/a/z",
         s"/state/windowed/w/hmida/$base/${base + 20}")
@@ -197,7 +203,7 @@ class StateReplicaSpec extends SparkSpec {
       assert(bodies("/state/keyvalue/w/lambda") == s"""[{"key":"lambda","win_start":${base + 10},"cnt":1}]""")
       val m = metrics(port)("w")
       assert(m.get("replica_builds").asLong == 1 && m.get("served_from_replica").asLong == 21 &&
-        m.get("served_by_reread").asLong == 0 && m.get("replica_rows").asLong == 3, m)
+        m.get("served_by_reread").asLong == 1 && m.get("replica_rows").asLong == 3, m)
     } finally srv.stop()
   }
 
@@ -216,16 +222,27 @@ class StateReplicaSpec extends SparkSpec {
     try {
       in.addData(Ev("k", ts(0)))
       q.processAllAvailable()
-      assert(get(port, "/state/keyvalue/w/k")._2 == s"""[{"key":"k","win_start":$base,"cnt":1}]""")
-      val batches1 = metrics(port)("w").get("state_batch_ids")
+      Seq(1, 2).foreach(_ =>
+        assert(get(port, "/state/keyvalue/w/k")._2 == s"""[{"key":"k","win_start":$base,"cnt":1}]"""))
+      val m1 = metrics(port)("w")
+      assert(m1.get("replica_builds").asLong == 1 && m1.get("replica_rows").asLong == 1, m1)
       in.addData(Ev("k", ts(1)), Ev("j", ts(2)))
       q.processAllAvailable()
+      // every GET after the commit sees it, whether read or served from a
+      // replica; the new version is replicated once its reads have cost
+      // as long as the last build
+      var n = 0
+      while (metrics(port)("w").get("replica_builds").asLong < 2) {
+        assert(n < 50, metrics(port)("w"))
+        assert(get(port, "/state/keyvalue/w/k")._2 == s"""[{"key":"k","win_start":$base,"cnt":2}]""")
+        assert(get(port, "/state/keyvalue/w/j")._2 == s"""[{"key":"j","win_start":$base,"cnt":1}]""")
+        n += 1
+      }
       assert(get(port, "/state/keyvalue/w/k")._2 == s"""[{"key":"k","win_start":$base,"cnt":2}]""")
-      assert(get(port, "/state/keyvalue/w/j")._2 == s"""[{"key":"j","win_start":$base,"cnt":1}]""")
       val m = metrics(port)("w")
-      assert(m.get("replica_builds").asLong == 2 && m.get("replica_rows").asLong == 2, m)
-      assert(batches1.size == 1 && m.get("state_batch_ids").size == 1 &&
-        m.get("state_batch_ids").get(0).asLong > batches1.get(0).asLong, m)
+      assert(m.get("replica_rows").asLong == 2, m)
+      assert(m1.get("state_batch_ids").size == 1 && m.get("state_batch_ids").size == 1 &&
+        m.get("state_batch_ids").get(0).asLong > m1.get("state_batch_ids").get(0).asLong, m)
     } finally { srv.stop(); q.stop() }
   }
 
@@ -249,25 +266,35 @@ class StateReplicaSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  test("two concurrent first GETs build the replica once") {
+  test("two concurrent GETs that find the replica due try one build, over the budget or not") {
     val s = spark
     import s.implicits._
     val df = Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("key", "cnt")
-    val both = new CyclicBarrier(2)
-    val srv = new StateHttpServer(s)
-      .registerView("c", () => { both.await(30, TimeUnit.SECONDS); df }, "key")
-    val port = srv.start()
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      val callers = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(callers)
-      val got = try Await.result(Future.sequence(Seq.fill(2)(Future(get(port, "/state/keyvalue/c/a")))),
-        60.seconds) finally callers.shutdown()
-      got.foreach(g => assert(g._1 == 200 && g._2 == """[{"key":"a","cnt":1},{"key":"a","cnt":3}]""", g))
-      val m = metrics(port)("c")
-      assert(m.get("replica_builds").asLong == 1 && m.get("served_from_replica").asLong == 2, m)
-    } finally srv.stop()
+    for (fits <- Seq(true, false)) {
+      val both = new CyclicBarrier(2)
+      @volatile var paired = false
+      val srv = new StateHttpServer(s)
+      if (!fits) srv.replicaBudget.limitBytes = 100
+      srv.registerView("c", () => { if (paired) both.await(30, TimeUnit.SECONDS); df }, "key")
+      val port = srv.start()
+      try {
+        // the version's first GET is read; it makes the next ones build
+        assert(get(port, "/state/keyvalue/c/a")._2 == """[{"key":"a","cnt":1},{"key":"a","cnt":3}]""")
+        paired = true
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration._
+        val callers = java.util.concurrent.Executors.newFixedThreadPool(2)
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(callers)
+        val got = try Await.result(Future.sequence(Seq.fill(2)(Future(get(port, "/state/keyvalue/c/a")))),
+          60.seconds) finally callers.shutdown()
+        got.foreach(g => assert(g._1 == 200 && g._2 == """[{"key":"a","cnt":1},{"key":"a","cnt":3}]""", g))
+        val m = metrics(port)("c")
+        if (fits) assert(m.get("replica_builds").asLong == 1 && m.get("served_from_replica").asLong == 2 &&
+          m.get("served_by_reread").asLong == 1, m)
+        else assert(m.get("replica_builds").asLong == 0 && m.get("builds_over_budget").asLong == 1 &&
+          m.get("served_by_reread").asLong == 3, m)
+      } finally srv.stop()
+    }
   }
 
   test("bodies and paging headers equal the former in-Spark rendering, replica and re-read alike") {
@@ -293,7 +320,8 @@ class StateReplicaSpec extends SparkSpec {
       assertParity(port, "local", local, "key", "win_start", reqs, maxRows)
       assertParity(port, "parquet", s.read.parquet(table), "key", "win_start", reqs, maxRows)
       val m = metrics(port)
-      assert(m("local").get("served_by_reread").asLong == 0 && m("local").get("replica_builds").asLong == 1, m)
+      // the first request was read, every later one served from the replica
+      assert(m("local").get("served_by_reread").asLong == 1 && m("local").get("replica_builds").asLong == 1, m)
       assert(m("parquet").get("served_from_replica").asLong == 0, m)
       // the null key is listed, first, by `all`
       assert(get(port, "/state/keyvalues/local/all?limit=1")._2.contains("null-key"))
@@ -317,21 +345,29 @@ class StateReplicaSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val view = Seq((5, base, 3L), (5, base + 10, 1L), (50, base, 2L)).toDF("id", "win", "cnt")
+    val table = Files.createTempDirectory("graft_replica_int").toString + "/t"
+    view.write.parquet(table)
     val srv = new StateHttpServer(s).registerView("i", () => view, "id", Some("win"))
+      .registerView("p", () => s.read.parquet(table), "id", Some("win"))
     val port = srv.start()
     try {
       val w = Windowed("5", base, base + 10)
       val want = oracle(view, "id", "win", w, 100, 0)
-      assert(get(port, w.path("i"))._2 == want.body)
+      // read (the version's first request), then from the replica, then re-read
+      Seq("i", "i", "p").foreach(st => assert(get(port, w.path(st))._2 == want.body, st))
       assert(want.body == s"""[{"id":5,"win":$base,"cnt":3,"rendered_key":"5@$base"},""" +
         s"""{"id":5,"win":${base + 10},"cnt":1,"rendered_key":"5@${base + 10}"}]""")
       // the former typed comparison (`id = '05'`) coerced the key to a
       // number and matched id 5; the replica compares `cast(id as string)`
       // with the key, as the point lookup always has, so "05" matches
-      // nothing on either endpoint
+      // nothing on either endpoint, from a replica or re-read
       assert(oracle(view, "id", "win", Windowed("05", base, base + 10), 100, 0).body == want.body)
-      assert(get(port, Windowed("05", base, base + 10).path("i")) == ((200, "[]", Map.empty)))
-      assert(get(port, Point("05").path("i")) == ((200, "[]", Map.empty)))
+      Seq("i", "p").foreach { st =>
+        assert(get(port, Windowed("05", base, base + 10).path(st)) == ((200, "[]", Map.empty)), st)
+        assert(get(port, Point("05").path(st)) == ((200, "[]", Map.empty)), st)
+      }
+      val m = metrics(port)
+      assert(m("i").get("served_from_replica").asLong == 3 && m("p").get("served_from_replica").asLong == 0, m)
     } finally srv.stop()
   }
 
@@ -348,24 +384,114 @@ class StateReplicaSpec extends SparkSpec {
       val (c0, b0, _) = get(port, "/state/metrics")
       assert(c0 == 200 && b0 ==
         """{"stores":[{"store":"typed","state_batch_ids":[],"replica_rows":0,"replica_builds":0,""" +
-        """"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0},""" +
+        """"builds_over_budget":0,"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0},""" +
         """{"store":"w","state_batch_ids":[],"replica_rows":0,"replica_builds":0,""" +
-        """"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0}]}""", b0)
+        """"builds_over_budget":0,"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0}]}""", b0)
       Seq("a", "b", "a").foreach(k => assert(get(port, s"/state/keyvalue/w/$k")._1 == 200))
       assert(get(port, "/state/keyvalue/typed/a")._2.contains(""""key":"a""""))
       val m = metrics(port)
       val w = m("w")
       assert(w.fieldNames().asScala.toSeq == Seq("store", "state_batch_ids", "replica_rows",
-        "replica_builds", "last_build_ms", "served_from_replica", "served_by_reread"))
+        "replica_builds", "builds_over_budget", "last_build_ms", "served_from_replica", "served_by_reread"))
       assert(w.get("state_batch_ids").isArray && w.get("state_batch_ids").size == 1 &&
         w.get("state_batch_ids").get(0).asLong >= 0, w)
       assert(w.get("replica_rows").asLong == 2 && w.get("replica_builds").asLong == 1 &&
-        w.get("last_build_ms").asDouble > 0 && w.get("served_from_replica").asLong == 3 &&
-        w.get("served_by_reread").asLong == 0, w)
+        w.get("builds_over_budget").asLong == 0 && w.get("last_build_ms").asDouble > 0 &&
+        w.get("served_from_replica").asLong == 2 && w.get("served_by_reread").asLong == 1, w)
       // a typed lambda over state is re-read, and still names the batch it read
       val t = m("typed")
       assert(t.get("served_by_reread").asLong == 1 && t.get("replica_builds").asLong == 0 &&
         t.get("state_batch_ids") == w.get("state_batch_ids"), t)
     } finally srv.stop()
+  }
+
+  test("a store over the replica heap budget is paged by per-request reads, as before replicas") {
+    val s = spark
+    import s.implicits._
+    val rows = (0 until 40).map(i => (f"k${i % 13}%02d", base + 10L * (i % 4), i.toLong))
+    val view = rows.toDF("key", "win_start", "cnt")
+    val maxRows = 5
+    val srv = new StateHttpServer(s, maxRows = maxRows)
+    // a few rows' worth: the view's 40 rows cannot all be held
+    srv.replicaBudget.limitBytes = 3000
+    srv.registerView("big", () => view, "key", Some("win_start"))
+    val port = srv.start()
+    try {
+      assertParity(port, "big", view, "key", "win_start",
+        Seq(All, Point("k03"), Range("k02", "k05"), Windowed("k01", base, base + 20)), maxRows)
+      val m = metrics(port)("big")
+      // one build was tried, once the first reads had been paid for; it
+      // stopped at the budget, and the unchanged version was not tried again
+      assert(m.get("replica_builds").asLong == 0 && m.get("builds_over_budget").asLong == 1 &&
+        m.get("replica_rows").asLong == 0 && m.get("served_from_replica").asLong == 0, m)
+      assert(srv.replicaBudget.heldBytes == 0, "a dropped build holds no budget")
+      // a budget that fits takes the next version's replica
+      srv.replicaBudget.limitBytes = 1L << 30
+      val next = view.filter(col("cnt") >= 0)
+      srv.registerView("big", () => next, "key", Some("win_start"))
+      Seq(1, 2).foreach(_ => assert(get(port, All.path("big"))._1 == 200))
+      assert(metrics(port)("big").get("replica_rows").asLong == 40)
+      assert(srv.replicaBudget.heldBytes > 40 * 56)
+    } finally srv.stop()
+    assert(srv.replicaBudget.heldBytes == 0, "stop() releases every replica")
+  }
+
+  test("a view that reads the clock is not reusable") {
+    val (_, view) = windowedCheckpoint("graft_replica_clock", Seq(Ev("a", ts(0))))
+    def id(df: DataFrame) = StateReplica.versionOf(df).identity
+    assert(id(view()).isDefined && id(view()) == id(view()))
+    Seq(unix_timestamp(current_timestamp()), unix_timestamp(now()), unix_timestamp(current_date()),
+      unix_timestamp(localtimestamp()), unix_timestamp())
+      .foreach { clock =>
+        val v = view().filter(col("win_start") > clock - 3600)
+        assert(id(v).isEmpty, s"$clock")
+        assert(StateReplica.versionOf(v).stateTables.size == 1)
+      }
+  }
+
+  test("a request that resolved an earlier commit never replaces a later commit's replica") {
+    val s = spark
+    import s.implicits._
+    implicit val sql = s.sqlContext
+    val ckpt = Files.createTempDirectory("graft_replica_order").toString
+    val in = MemoryStream[Ev]
+    val q = WindowedStreams.tumblingCounts(in.toDF(), "ts", "10 seconds", "1 hour", col("key"))
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .outputMode("update").start()
+    val (earlier, later) = try {
+      in.addData(Ev("k", ts(0))); q.processAllAvailable()
+      val b1 = q.lastProgress.batchId
+      in.addData(Ev("k", ts(1))); q.processAllAvailable()
+      (b1, q.lastProgress.batchId)
+    } finally q.stop()
+    // the view resolves the batch `at` names, standing for a request that
+    // evaluated it before the later commit was read
+    @volatile var at = later
+    def atBatch() = s.read.format("statestore").option("batchId", at).load(ckpt)
+      .select(col("key.key").as("key"), col("value.count").as("cnt"))
+    val srv = new StateHttpServer(s).registerView("o", () => atBatch(), "key")
+    val port = srv.start()
+    try {
+      Seq(1, 2).foreach(_ => assert(get(port, "/state/keyvalue/o/k")._2 == """[{"key":"k","cnt":2}]"""))
+      assert(metrics(port)("o").get("replica_builds").asLong == 1)
+      at = earlier
+      (1 to 6).foreach(_ => assert(get(port, "/state/keyvalue/o/k")._2 == """[{"key":"k","cnt":1}]"""))
+      val m = metrics(port)("o")
+      assert(m.get("replica_builds").asLong == 1 && m.get("served_by_reread").asLong == 7, m)
+      at = later
+      val jobs = jobsDuring(assert(get(port, "/state/keyvalue/o/k")._2 == """[{"key":"k","cnt":2}]"""))
+      assert(jobs == 0, "the later commit's replica is still held")
+    } finally srv.stop()
+  }
+
+  test("the version order compares each state table's batch") {
+    def t(ckpt: String, op: Int, batch: Long) =
+      s"StateTable [stateCkptLocation=$ckpt/state][batchId=$batch][operatorId=$op][storeName=default]"
+    assert(StateReplica.later(Seq(t("/c", 0, 2)), Seq(t("/c", 0, 1))))
+    assert(!StateReplica.later(Seq(t("/c", 0, 1)), Seq(t("/c", 0, 2))))
+    assert(!StateReplica.later(Seq(t("/c", 0, 1)), Seq(t("/c", 0, 1))))
+    assert(!StateReplica.later(Seq(t("/c", 0, 2)), Seq(t("/d", 0, 1))), "another checkpoint")
+    assert(StateReplica.later(Seq(t("/c", 0, 2), t("/c", 1, 2)), Seq(t("/c", 0, 1), t("/c", 1, 2))))
+    assert(!StateReplica.later(Seq(t("/c", 0, 2), t("/c", 1, 1)), Seq(t("/c", 0, 1), t("/c", 1, 2))))
   }
 }
