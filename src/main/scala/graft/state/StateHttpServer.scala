@@ -38,7 +38,10 @@ import java.nio.charset.StandardCharsets
   * binary-search it and start no Spark job. The view's closure is still
   * called on every request, and the replica is reused only while that
   * evaluation resolves to the same plan and the same committed state
-  * batch (the version rule in [[StateReplica.versionOf]]). Until a
+  * batch (the version rule in [[StateReplica.versionOf]]). A closure over
+  * [[StateQueries]]' reads resolves the state source once per commit:
+  * between commits a call costs one listing of the checkpoint's commit
+  * log plus the analysis of what the closure adds on top. Until a
   * version's requests have spent as long on their own reads as the
   * store's last build took, and for a view that cannot be reused (a
   * parquet table, a memory sink, a typed lambda), a request is read in
@@ -55,8 +58,12 @@ import java.nio.charset.StandardCharsets
   * `X-Graft-Next-Offset`, keeping the body a plain JSON array so
   * reference clients parse it unchanged. `GET /state/metrics` reports,
   * per store, the state batch ids served, the replica's rows, builds,
-  * builds dropped over the heap budget and last build time, and how many
-  * requests the replica answered against how many were re-read.
+  * builds dropped over the heap budget and last build time, how many
+  * requests the replica answered against how many were re-read, and the
+  * total time spent calling the view's closure (`view_eval_ms`); and, for
+  * the server's session, how many [[StateQueries]] reads resolved the
+  * state source against how many reused an earlier resolution of the same
+  * commit (`state_source_resolves`, `state_source_reuses`).
   */
 class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
                       maxRows: Int = 10000) {
@@ -141,9 +148,11 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
 
   /** Register with an arbitrary state view — e.g. a projection of
     * [[StateQueries.flattened]] with friendlier column names. `stateDf`
-    * is evaluated on every request, so reads see the latest committed
-    * checkpoint batch; `keyCol` is the logical key and `winStartCol` (for
-    * windowed stores) the window start. */
+    * is still called on every request, so reads see the latest committed
+    * checkpoint batch; the [[StateQueries]] reads inside it return the
+    * DataFrame they resolved at that commit, so a call between commits
+    * analyzes only the nodes the closure adds. `keyCol` is the logical key
+    * and `winStartCol` (for windowed stores) the window start. */
   def registerView(name: String, stateDf: () => DataFrame, keyCol: String,
                    winStartCol: Option[String] = None): this.type = {
     stores.put(name, new ServedStore(stateDf, keyCol, winStartCol, replicaBudget)).foreach(_.release())
@@ -342,8 +351,10 @@ class StateHttpServer(spark: SparkSession, bindPort: Int = 0,
           s"""{"host":${quote(h)},"port":$pt,"store":${quote(store)},"key":${quote(key)}}"""
         }
       case "state" :: "metrics" :: Nil =>
+        val memo = CommitMemo.of(spark)
         Some(stores.toSeq.sortBy(_._1).map { case (n, st) => st.metricsJson(n, quote) }
-          .mkString("""{"stores":[""", ",", "]}"))
+          .mkString("""{"stores":[""", ",", s"""],"state_source_resolves":${
+            memo.resolves.get},"state_source_reuses":${memo.reuses.get}}"""))
       case _ => None
     }
   }

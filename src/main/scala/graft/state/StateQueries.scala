@@ -1,7 +1,13 @@
 package graft.state
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.lang.ref.SoftReference
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Interactive state queries — the reference's "query engine face"
   * (`utils/IQueriesService.java`, SURVEY.md §2.9): read a running/stopped
@@ -15,15 +21,42 @@ import org.apache.spark.sql.functions._
   * `MetadataService` key→host hop disappears: the driver addresses every
   * partition).
   *
+  * A read resolves ONCE PER COMMIT ([[CommitMemo]]): [[store]],
+  * [[twsStore]], [[flattened]] and [[flattenedTws]] first probe the
+  * checkpoint's commit log with one listing of `<checkpoint>/commits`, and
+  * while its latest commit file is the same (the freshness token: the
+  * file's batch id, modification time and length) they return the
+  * DataFrame they resolved before, already analyzed. A new commit, or a
+  * checkpoint deleted and rewritten at the same path, resolves again. The
+  * source's own "latest" is the same file (`StateSourceOptions` takes the
+  * batch from `CommitLog.getLatest`). A checkpoint without a usable commit
+  * log is resolved on every call.
+  *
   * The reference's REST layer is a transport detail over exactly these
   * four reads; any HTTP framework can wrap the returned DataFrames.
   */
 object StateQueries {
 
+  private def batchOption(batchId: Option[Long]): Seq[(String, String)] =
+    batchId.map(b => "batchId" -> b.toString).toSeq
+
+  /** `view` of the state source loaded with `options`, resolved once per
+    * commit of the checkpoint ([[CommitMemo]]). */
+  private def read(spark: SparkSession, checkpointDir: String, view: String, options: Seq[(String, String)])
+                  (shape: DataFrame => DataFrame): DataFrame =
+    CommitMemo(spark, StateRead(checkpointDir, view, options))(
+      shape(spark.read.format("statestore").options(options.toMap).load(checkpointDir)))
+
   /** Raw state rows (columns `key`, `value` as structs, `partition_id`)
-    * for operator 0 of the query checkpointed at `checkpointDir`. */
-  def store(spark: SparkSession, checkpointDir: String): DataFrame =
-    spark.read.format("statestore").load(checkpointDir)
+    * for operator 0 of the query checkpointed at `checkpointDir`, at its
+    * latest commit or at `batchId`. */
+  def store(spark: SparkSession, checkpointDir: String, batchId: Option[Long] = None): DataFrame =
+    read(spark, checkpointDir, "store", batchOption(batchId))(identity)
+
+  private def twsOptions(stateVarName: String, flattenCollections: Boolean,
+                         batchId: Option[Long]): Seq[(String, String)] =
+    Seq("stateVarName" -> stateVarName, "flattenCollectionTypes" -> flattenCollections.toString) ++
+      batchOption(batchId)
 
   /** State of ONE named variable of a `transformWithState` operator
     * (the round-8 streaming family — StreamZScore's ring buffer,
@@ -36,22 +69,20 @@ object StateQueries {
     * filter directly; ValueState always reads as `key` + `value`. */
   def twsStore(spark: SparkSession, checkpointDir: String,
                stateVarName: String,
-               flattenCollections: Boolean = true): DataFrame =
-    spark.read.format("statestore")
-      .option("stateVarName", stateVarName)
-      .option("flattenCollectionTypes", flattenCollections.toString)
-      .load(checkpointDir)
+               flattenCollections: Boolean = true,
+               batchId: Option[Long] = None): DataFrame =
+    read(spark, checkpointDir, "store", twsOptions(stateVarName, flattenCollections, batchId))(identity)
 
   /** Flattened view: key.* and value.* side by side (names prefixed to
     * avoid collisions). */
-  def flattened(spark: SparkSession, checkpointDir: String): DataFrame = {
-    val df = store(spark, checkpointDir)
-    val keyCols = df.select(col("key.*")).columns
-      .map(c => col(s"key.$c").as(s"key_$c"))
-    val valCols = df.select(col("value.*")).columns
-      .map(c => col(s"value.$c").as(s"value_$c"))
-    df.select(keyCols ++ valCols: _*)
-  }
+  def flattened(spark: SparkSession, checkpointDir: String, batchId: Option[Long] = None): DataFrame =
+    read(spark, checkpointDir, "flattened", batchOption(batchId)) { df =>
+      val keyCols = df.select(col("key.*")).columns
+        .map(c => col(s"key.$c").as(s"key_$c"))
+      val valCols = df.select(col("value.*")).columns
+        .map(c => col(s"value.$c").as(s"value_$c"))
+      df.select(keyCols ++ valCols: _*)
+    }
 
   /** Flattened view of one TWS state variable: the `key` struct's fields
     * become `key_*`; every other column (ValueState's `value`,
@@ -62,30 +93,30 @@ object StateQueries {
     * column names don't depend on how the processor declared its
     * encoders. */
   def flattenedTws(spark: SparkSession, checkpointDir: String,
-                   stateVarName: String): DataFrame = {
-    val df = twsStore(spark, checkpointDir, stateVarName)
-    def expand(c: String, prefix: String) = df.schema(c).dataType match {
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fieldNames.toSeq.map(f => col(s"$c.$f").as(
-          if (s.fieldNames.length == 1) prefix else s"${prefix}_$f"))
-      case _ => Seq(col(c).as(prefix))
-    }
-    val keyCols = expand("key", "key")
-    // MapState variables surface as (user_map_key, user_map_value) —
-    // rename to (map_key, value) so one grouping key plus one value
-    // column come out, same as value/list states (a shared "value"
-    // prefix for both would collide)
-    val valCols = df.columns.toSeq.filter(c => c != "key" && c != "partition_id")
-      .flatMap { c =>
-        val prefix =
-          if (c == "user_map_key") "map_key"
-          else if (c == "user_map_value") "value"
-          else if (c.startsWith("map_")) c
-          else "value"
-        expand(c, prefix)
+                   stateVarName: String, batchId: Option[Long] = None): DataFrame =
+    read(spark, checkpointDir, "flattened", twsOptions(stateVarName, flattenCollections = true, batchId)) { df =>
+      def expand(c: String, prefix: String) = df.schema(c).dataType match {
+        case s: org.apache.spark.sql.types.StructType =>
+          s.fieldNames.toSeq.map(f => col(s"$c.$f").as(
+            if (s.fieldNames.length == 1) prefix else s"${prefix}_$f"))
+        case _ => Seq(col(c).as(prefix))
       }
-    df.select(keyCols ++ valCols: _*)
-  }
+      val keyCols = expand("key", "key")
+      // MapState variables surface as (user_map_key, user_map_value) —
+      // rename to (map_key, value) so one grouping key plus one value
+      // column come out, same as value/list states (a shared "value"
+      // prefix for both would collide)
+      val valCols = df.columns.toSeq.filter(c => c != "key" && c != "partition_id")
+        .flatMap { c =>
+          val prefix =
+            if (c == "user_map_key") "map_key"
+            else if (c == "user_map_value") "value"
+            else if (c.startsWith("map_")) c
+            else "value"
+          expand(c, prefix)
+        }
+      df.select(keyCols ++ valCols: _*)
+    }
 
   /** Store discovery: which stateful operators (and state stores) a
     * checkpoint holds, with partition counts and batch ranges — the
@@ -119,4 +150,94 @@ object StateQueries {
   /** The reference's `"$key@$windowStart"` rendering of a window row. */
   def renderedKey(keyCol: Column, winStartCol: Column): Column =
     concat(keyCol.cast("string"), lit("@"), winStartCol.cast("long").cast("string"))
+}
+
+/** One state read: the checkpoint, the view of it (`store` or
+  * `flattened`) and the State Data Source options it is loaded with. */
+private[state] final case class StateRead(checkpointDir: String, view: String,
+                                          options: Seq[(String, String)])
+
+/** The per-commit memo of [[StateQueries]]' reads, one per session. Each
+  * read keeps its commit log's `FileSystem` and path (resolved once per
+  * read, not per probe) and the DataFrame resolved at the last commit
+  * probed. A call lists `<checkpoint>/commits` and reuses that DataFrame
+  * only when the latest commit file carries the token it was resolved
+  * under; a reader that probed a later commit than an entry's never gets
+  * the entry. With no usable commit log (no `commits/` directory, no
+  * commit yet, a listing that fails) the read is resolved with no memo.
+  *
+  * The session is held weakly (the key of a `WeakHashMap`) and each
+  * DataFrame softly, so the memo pins no session: a session nothing else
+  * holds is collected once its DataFrames' soft references are cleared,
+  * and a stopped session's memo is dropped when the next session's is
+  * made. */
+private[state] object CommitMemo {
+
+  /** The freshness token: the latest commit file's batch id, modification
+    * time and length. The batch id alone cannot tell a checkpoint deleted
+    * and rewritten at the same path up to the same batch, whose commit
+    * files usually have the same length too; the modification time can. */
+  final case class Commit(batchId: Long, modifiedMs: Long, length: Long)
+
+  private final class Resolved(val commit: Commit, val df: SoftReference[DataFrame])
+
+  private final class Slot(val fs: FileSystem, val commits: Path) {
+    @volatile var resolved: Resolved = _
+  }
+
+  final class Memo {
+    private[CommitMemo] val slots = new ConcurrentHashMap[StateRead, Option[Slot]]
+    val resolves = new AtomicLong
+    val reuses = new AtomicLong
+  }
+
+  private val memos = new java.util.WeakHashMap[SparkSession, Memo]
+
+  def of(spark: SparkSession): Memo = memos.synchronized {
+    var memo = memos.get(spark)
+    if (memo == null) {
+      memos.keySet.removeIf(_.sparkContext.isStopped)
+      memo = new Memo
+      memos.put(spark, memo)
+    }
+    memo
+  }
+
+  /** The checkpoint's latest commit, or None when its commit log has no
+    * commit or cannot be listed. */
+  private def latest(slot: Slot): Option[Commit] =
+    try {
+      val batches = slot.fs.listStatus(slot.commits)
+        .filter(f => f.isFile && f.getPath.getName.nonEmpty && f.getPath.getName.forall(Character.isDigit))
+      if (batches.isEmpty) None
+      else {
+        val f = batches.maxBy(_.getPath.getName.toLong)
+        Some(Commit(f.getPath.getName.toLong, f.getModificationTime, f.getLen))
+      }
+    } catch { case NonFatal(_) => None }
+
+  /** `resolve`'s DataFrame for `read`, or the one resolved at the same
+    * commit before. */
+  def apply(spark: SparkSession, read: StateRead)(resolve: => DataFrame): DataFrame = {
+    val memo = of(spark)
+    val slot = memo.slots.computeIfAbsent(read, r =>
+      try {
+        val commits = new Path(r.checkpointDir, "commits")
+        Some(new Slot(commits.getFileSystem(spark.sessionState.newHadoopConf()), commits))
+      } catch { case NonFatal(_) => None })
+    val commit = slot.flatMap(latest)
+    val reused = for {
+      s <- slot; c <- commit; r <- Option(s.resolved) if r.commit == c; df <- Option(r.df.get)
+    } yield df
+    reused match {
+      case Some(df) =>
+        memo.reuses.incrementAndGet()
+        df
+      case None =>
+        val df = resolve
+        memo.resolves.incrementAndGet()
+        for (s <- slot; c <- commit) s.resolved = new Resolved(c, new SoftReference(df))
+        df
+    }
+  }
 }

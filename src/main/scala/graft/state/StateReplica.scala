@@ -287,6 +287,7 @@ private[state] final class ServedStore(stateDf: () => DataFrame, val keyCol: Str
   @volatile private var lastBuildMs = 0.0
   private val fromReplica = new AtomicLong
   private val reread = new AtomicLong
+  private val viewEvalNanos = new AtomicLong
   @volatile private var servedTables = Seq.empty[String]
   // guarded by `this`: the newest reusable identity asked and not built,
   // with the ms its requests spent reading; and the last identity whose
@@ -299,7 +300,9 @@ private[state] final class ServedStore(stateDf: () => DataFrame, val keyCol: Str
     * request. */
   def serve(page: Page)(lookup: StateReplica => RenderedPage)
            (filter: DataFrame => DataFrame): RenderedPage = {
+    val t0 = System.nanoTime()
     val df = stateDf()
+    viewEvalNanos.addAndGet(System.nanoTime() - t0)
     val version = StateReplica.versionOf(df)
     servedTables = version.stateTables
     version.identity.flatMap(replicaOf(df, version, _)) match {
@@ -365,5 +368,6 @@ private[state] final class ServedStore(stateDf: () => DataFrame, val keyCol: Str
       current.fold(0)(_.replica.size)},"replica_builds":${builds.get},"builds_over_budget":${
       overBudget.get},"last_build_ms":${
       "%.1f".formatLocal(java.util.Locale.ROOT, lastBuildMs)},"served_from_replica":${
-      fromReplica.get},"served_by_reread":${reread.get}}"""
+      fromReplica.get},"served_by_reread":${reread.get},"view_eval_ms":${
+      "%.1f".formatLocal(java.util.Locale.ROOT, viewEvalNanos.get / 1e6)}}"""
 }

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local SparkSession for specs — one per suite, graft configs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -26,6 +30,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously, so a marker job run afterwards bounds the count: once
+    * its start is seen, every earlier job start has been seen too. */
+  def jobsDuring(body: => Unit): Int = {
+    val marker = "spark-spec-marker"
+    val seen = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else seen.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never seen")
+      seen.get
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   override def afterAll(): Unit = {

@@ -4,12 +4,16 @@ import graft.SparkSpec
 import graft.streaming.WindowedStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import java.util.Comparator
 
 /** The four interactive state-query shapes of SURVEY.md §2.9 over a real
   * streaming checkpoint (reference `IQueriesService.java` endpoints;
-  * in-process window scan `TopologiesTest.scala:60-70`). */
+  * in-process window scan `TopologiesTest.scala:60-70`), and the
+  * per-commit memo behind the reads: one resolution per commit, a new
+  * commit or a rewritten checkpoint resolved again, no entry shared
+  * between reads with different options, no memo without a commit log. */
 class StateQueriesSpec extends SparkSpec {
 
   private val base = 1700000000L
@@ -136,5 +140,160 @@ class StateQueriesSpec extends SparkSpec {
     val rg = StateQueries.range(st, col("key"), "a", "a")
       .as[(String, Double)].collect().map(_._2).toSet
     assert(rg == Set(2.0, 3.0, 4.0))
+  }
+
+  // ------------------------------------------------------------------
+  // the per-commit memo
+
+  private def counts(): (Long, Long) = {
+    val m = CommitMemo.of(spark)
+    (m.resolves.get, m.reuses.get)
+  }
+
+  /** (resolves, reuses) of the session's memo while `body` runs. */
+  private def memoDuring[A](body: => A): (A, Long, Long) = {
+    val (r0, u0) = counts()
+    val a = body
+    val (r1, u1) = counts()
+    (a, r1 - r0, u1 - u0)
+  }
+
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
+
+  /** Writes a windowed count over `batches` (one micro-batch each) into a
+    * checkpoint at `ckpt`, then stops the query. */
+  private def windowedCounts(ckpt: String, batches: Seq[Seq[Ev]]): Unit = {
+    val s = spark
+    import s.implicits._
+    implicit val sql = s.sqlContext
+    val in = MemoryStream[Ev]
+    val q = WindowedStreams.tumblingCounts(in.toDF(), "ts", "10 seconds", "1 hour", col("key"))
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .outputMode("update").start()
+    try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  private def keyCounts(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] = {
+    val s = spark
+    import s.implicits._
+    df.select(col("key_key"), col("value_count")).as[(String, Long)].collect().toSet
+  }
+
+  private def batchOf(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    StateReplica.batchIds(StateReplica.versionOf(df).stateTables)
+
+  test("20 reads of an unchanged checkpoint resolve the state source once") {
+    val ckpt = Files.createTempDirectory("graft_memo_once").toString
+    windowedCounts(ckpt, Seq(Seq(Ev("a", 1, ts(0)), Ev("b", 1, ts(1)))))
+    val (dfs, resolves, reuses) = memoDuring((1 to 20).map(_ => StateQueries.flattened(spark, ckpt)))
+    assert(resolves == 1 && reuses == 19, s"resolves $resolves, reuses $reuses")
+    assert(dfs.forall(_ eq dfs.head))
+    assert(keyCounts(dfs.last) == Set(("a", 1L), ("b", 1L)))
+  }
+
+  test("a batch committed by a running query shows on the next read, at a new batch id") {
+    val s = spark
+    import s.implicits._
+    implicit val sql = s.sqlContext
+    val ckpt = Files.createTempDirectory("graft_memo_commit").toString
+    val in = MemoryStream[Ev]
+    val q = WindowedStreams.tumblingCounts(in.toDF(), "ts", "10 seconds", "1 hour", col("key"))
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .outputMode("update").start()
+    try {
+      in.addData(Ev("a", 1, ts(0)))
+      q.processAllAvailable()
+      val v1 = StateQueries.flattened(s, ckpt)
+      assert(StateQueries.flattened(s, ckpt) eq v1)
+      assert(keyCounts(v1) == Set(("a", 1L)))
+      in.addData(Ev("a", 1, ts(1)), Ev("b", 1, ts(2)))
+      q.processAllAvailable()
+      val (v2, resolves, _) = memoDuring(StateQueries.flattened(s, ckpt))
+      assert(resolves == 1 && !(v2 eq v1))
+      assert(batchOf(v2).head > batchOf(v1).head, s"${batchOf(v1)} then ${batchOf(v2)}")
+      assert(keyCounts(v2) == Set(("a", 2L), ("b", 1L)))
+    } finally q.stop()
+  }
+
+  test("a checkpoint deleted and rewritten at the same path and batch id is resolved again") {
+    val dir = Files.createTempDirectory("graft_memo_rewrite")
+    val ckpt = dir.toString
+    windowedCounts(ckpt, Seq(Seq(Ev("a", 1, ts(0)))))
+    val v1 = StateQueries.flattened(spark, ckpt)
+    assert(keyCounts(v1) == Set(("a", 1L)))
+    deleteTree(dir)
+    windowedCounts(ckpt, Seq(Seq(Ev("z", 1, ts(0)), Ev("z", 1, ts(1)))))
+    val (v2, resolves, reuses) = memoDuring(StateQueries.flattened(spark, ckpt))
+    assert(batchOf(v2) == batchOf(v1), "the rewrite ends at the same batch")
+    assert(resolves == 1 && reuses == 0, s"resolves $resolves, reuses $reuses")
+    assert(keyCounts(v2) == Set(("z", 2L)))
+  }
+
+  test("reads of two TWS variables and of an explicit batch id keep their own entries") {
+    import graft.streaming.StreamKlDrift
+    import graft.streaming.StreamKlDrift.TokDoc
+    val s = spark
+    import s.implicits._
+    implicit val sql = s.sqlContext
+    val ckpt = Files.createTempDirectory("graft_memo_tws").toString
+    withRocksDB {
+      val in = MemoryStream[TokDoc]
+      val q = StreamKlDrift.monitor(in.toDS(), Map("the" -> 0.5, "cat" -> 0.5), oovProb = 1e-6)
+        .writeStream.format("noop").option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        in.addData(TokDoc("g1", 1L, 1000L, Seq("the", "cat", "the")))
+        q.processAllAvailable()
+        in.addData(TokDoc("g1", 2L, 2000L, Seq("cat")))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val (dfs, resolves, reuses) = memoDuring(Seq("counts", "total", "counts", "total")
+      .map(v => StateQueries.flattenedTws(s, ckpt, v)))
+    val Seq(c1, t1, c2, t2) = dfs
+    assert(resolves == 2 && reuses == 2, s"resolves $resolves, reuses $reuses")
+    assert((c2 eq c1) && (t2 eq t1) && !(c1 eq t1))
+    assert(c1.columns.toSeq == Seq("key", "map_key", "value") && t1.columns.toSeq == Seq("key", "value"))
+    assert(c1.select("map_key", "value").as[(String, Long)].collect().toMap == Map("the" -> 2L, "cat" -> 2L))
+    assert(t1.select("value").as[Long].collect().toSeq == Seq(4L))
+
+    // the first batch's state, read by its id, is not the latest commit's
+    val latest = batchOf(c1).head
+    val at0 = StateQueries.flattenedTws(s, ckpt, "counts", batchId = Some(latest - 1))
+    assert(!(at0 eq c1) && batchOf(at0) == Seq(latest - 1))
+    assert(at0.select("map_key", "value").as[(String, Long)].collect().toMap == Map("the" -> 2L, "cat" -> 1L))
+    assert(StateQueries.flattenedTws(s, ckpt, "counts") eq c1)
+    assert(StateQueries.flattenedTws(s, ckpt, "counts", batchId = Some(latest - 1)) eq at0)
+  }
+
+  test("a directory without a usable commit log is resolved on every call, as without the memo") {
+    import org.apache.spark.sql.execution.datasources.v2.state.StateDataSourceException
+    val dir = Files.createTempDirectory("graft_memo_nocommits")
+    val ckpt = dir.toString
+    // no commits/ yet: the source's own error, on every call
+    val (_, _, u0) = memoDuring((1 to 2).foreach(_ =>
+      intercept[StateDataSourceException](StateQueries.flattened(spark, ckpt))))
+    assert(u0 == 0)
+    // the same directory once a query has committed into it reads
+    windowedCounts(ckpt, Seq(Seq(Ev("a", 1, ts(0)))))
+    val v = StateQueries.flattened(spark, ckpt)
+    assert(keyCounts(v) == Set(("a", 1L)))
+    assert(StateQueries.flattened(spark, ckpt) eq v)
+    // a commit log gone again is not answered from the memo: the source
+    // needs it even for an explicit batch id (Spark 4.1 reads the state's
+    // unique ids from it), so each call fails as the source does
+    val batch = batchOf(v).head
+    deleteTree(dir.resolve("commits"))
+    val (_, _, u1) = memoDuring((1 to 2).foreach { _ =>
+      intercept[StateDataSourceException](StateQueries.flattened(spark, ckpt))
+      intercept[StateDataSourceException](StateQueries.flattened(spark, ckpt, batchId = Some(batch)))
+    })
+    assert(u1 == 0)
   }
 }

@@ -2,7 +2,6 @@ package graft.state
 
 import graft.SparkSpec
 import graft.streaming.WindowedStreams
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,7 +10,6 @@ import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.{CyclicBarrier, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.io.Source
 import scala.jdk.CollectionConverters._
 
@@ -41,29 +39,6 @@ class StateReplicaSpec extends SparkSpec {
       .flatMap(h => Option(conn.getHeaderField(h)).map(h -> _)).toMap
     conn.disconnect()
     (code, body, headers)
-  }
-
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously, so a marker job run afterwards bounds the count: once
-    * its start is seen, every earlier job start has been seen too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val marker = "state-replica-spec-marker"
-    val seen = new AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          markerSeen.countDown()
-        else seen.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never seen")
-      seen.get
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def metrics(port: Int): Map[String, com.fasterxml.jackson.databind.JsonNode] = {
@@ -382,17 +357,31 @@ class StateReplicaSpec extends SparkSpec {
     val port = srv.start()
     try {
       val (c0, b0, _) = get(port, "/state/metrics")
+      // the session's memo counts what earlier tests read too
+      val memo = CommitMemo.of(s)
       assert(c0 == 200 && b0 ==
         """{"stores":[{"store":"typed","state_batch_ids":[],"replica_rows":0,"replica_builds":0,""" +
-        """"builds_over_budget":0,"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0},""" +
+        """"builds_over_budget":0,"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0,""" +
+        """"view_eval_ms":0.0},""" +
         """{"store":"w","state_batch_ids":[],"replica_rows":0,"replica_builds":0,""" +
-        """"builds_over_budget":0,"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0}]}""", b0)
+        """"builds_over_budget":0,"last_build_ms":0.0,"served_from_replica":0,"served_by_reread":0,""" +
+        s""""view_eval_ms":0.0}],"state_source_resolves":${memo.resolves.get},""" +
+        s""""state_source_reuses":${memo.reuses.get}}""", b0)
+      val (resolves0, reuses0) = (memo.resolves.get, memo.reuses.get)
       Seq("a", "b", "a").foreach(k => assert(get(port, s"/state/keyvalue/w/$k")._1 == 200))
       assert(get(port, "/state/keyvalue/typed/a")._2.contains(""""key":"a""""))
+      val (_, body, _) = get(port, "/state/metrics")
+      val top = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      assert(top.fieldNames().asScala.toSeq == Seq("stores", "state_source_resolves", "state_source_reuses"))
+      // four view calls over one new, unchanged checkpoint: one resolution
+      assert(top.get("state_source_resolves").asLong - resolves0 == 1 &&
+        top.get("state_source_reuses").asLong - reuses0 == 3, body)
       val m = metrics(port)
       val w = m("w")
       assert(w.fieldNames().asScala.toSeq == Seq("store", "state_batch_ids", "replica_rows",
-        "replica_builds", "builds_over_budget", "last_build_ms", "served_from_replica", "served_by_reread"))
+        "replica_builds", "builds_over_budget", "last_build_ms", "served_from_replica", "served_by_reread",
+        "view_eval_ms"))
+      assert(w.get("view_eval_ms").asDouble > 0 && m("typed").get("view_eval_ms").asDouble > 0, m)
       assert(w.get("state_batch_ids").isArray && w.get("state_batch_ids").size == 1 &&
         w.get("state_batch_ids").get(0).asLong >= 0, w)
       assert(w.get("replica_rows").asLong == 2 && w.get("replica_builds").asLong == 1 &&
