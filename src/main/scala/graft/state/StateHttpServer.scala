@@ -40,8 +40,10 @@ import java.nio.charset.StandardCharsets
   * evaluation resolves to the same plan and the same committed state
   * batch (the version rule in [[StateReplica.versionOf]]). A closure over
   * [[StateQueries]]' reads resolves the state source once per commit:
-  * between commits a call costs one listing of the checkpoint's commit
-  * log plus the analysis of what the closure adds on top. Until a
+  * between commits a call costs two file-status calls in the checkpoint's
+  * commit log plus the analysis of what the closure adds on top, and a
+  * checkpoint deleted and rewritten at the same path is a new version
+  * even at the same batch id. Until a
   * version's requests have spent as long on their own reads as the
   * store's last build took, and for a view that cannot be reused (a
   * parquet table, a memory sink, a typed lambda), a request is read in

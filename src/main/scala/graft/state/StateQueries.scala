@@ -1,12 +1,17 @@
 package graft.state
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.state.StateTable
 import org.apache.spark.sql.functions._
 
+import java.io.FileNotFoundException
 import java.lang.ref.SoftReference
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
+import scala.annotation.tailrec
 import scala.util.control.NonFatal
 
 /** Interactive state queries — the reference's "query engine face"
@@ -23,22 +28,21 @@ import scala.util.control.NonFatal
   *
   * A read resolves ONCE PER COMMIT ([[CommitMemo]]): [[store]],
   * [[twsStore]], [[flattened]] and [[flattenedTws]] first probe the
-  * checkpoint's commit log with one listing of `<checkpoint>/commits`, and
-  * while its latest commit file is the same (the freshness token: the
-  * file's batch id, modification time and length) they return the
-  * DataFrame they resolved before, already analyzed. A new commit, or a
-  * checkpoint deleted and rewritten at the same path, resolves again. The
-  * source's own "latest" is the same file (`StateSourceOptions` takes the
-  * batch from `CommitLog.getLatest`). A checkpoint without a usable commit
-  * log is resolved on every call.
+  * checkpoint's commit log under `<checkpoint>/commits` (the status of the
+  * commit file they last resolved at and of the next batch's file; a
+  * listing when there is no such file), and while its latest commit file
+  * is the same (the freshness token: the file's batch id, modification
+  * time and length) they return the DataFrame they resolved before,
+  * already analyzed. A new commit, or a checkpoint deleted and rewritten
+  * at the same path, resolves again. The source's own "latest" is the
+  * same file (`StateSourceOptions` takes the batch from
+  * `CommitLog.getLatest`). A checkpoint without a usable commit log is
+  * resolved on every call.
   *
   * The reference's REST layer is a transport detail over exactly these
   * four reads; any HTTP framework can wrap the returned DataFrames.
   */
 object StateQueries {
-
-  private def batchOption(batchId: Option[Long]): Seq[(String, String)] =
-    batchId.map(b => "batchId" -> b.toString).toSeq
 
   /** `view` of the state source loaded with `options`, resolved once per
     * commit of the checkpoint ([[CommitMemo]]). */
@@ -49,14 +53,12 @@ object StateQueries {
 
   /** Raw state rows (columns `key`, `value` as structs, `partition_id`)
     * for operator 0 of the query checkpointed at `checkpointDir`, at its
-    * latest commit or at `batchId`. */
-  def store(spark: SparkSession, checkpointDir: String, batchId: Option[Long] = None): DataFrame =
-    read(spark, checkpointDir, "store", batchOption(batchId))(identity)
+    * latest commit. */
+  def store(spark: SparkSession, checkpointDir: String): DataFrame =
+    read(spark, checkpointDir, "store", Nil)(identity)
 
-  private def twsOptions(stateVarName: String, flattenCollections: Boolean,
-                         batchId: Option[Long]): Seq[(String, String)] =
-    Seq("stateVarName" -> stateVarName, "flattenCollectionTypes" -> flattenCollections.toString) ++
-      batchOption(batchId)
+  private def twsOptions(stateVarName: String, flattenCollections: Boolean): Seq[(String, String)] =
+    Seq("stateVarName" -> stateVarName, "flattenCollectionTypes" -> flattenCollections.toString)
 
   /** State of ONE named variable of a `transformWithState` operator
     * (the round-8 streaming family — StreamZScore's ring buffer,
@@ -69,14 +71,13 @@ object StateQueries {
     * filter directly; ValueState always reads as `key` + `value`. */
   def twsStore(spark: SparkSession, checkpointDir: String,
                stateVarName: String,
-               flattenCollections: Boolean = true,
-               batchId: Option[Long] = None): DataFrame =
-    read(spark, checkpointDir, "store", twsOptions(stateVarName, flattenCollections, batchId))(identity)
+               flattenCollections: Boolean = true): DataFrame =
+    read(spark, checkpointDir, "store", twsOptions(stateVarName, flattenCollections))(identity)
 
   /** Flattened view: key.* and value.* side by side (names prefixed to
     * avoid collisions). */
-  def flattened(spark: SparkSession, checkpointDir: String, batchId: Option[Long] = None): DataFrame =
-    read(spark, checkpointDir, "flattened", batchOption(batchId)) { df =>
+  def flattened(spark: SparkSession, checkpointDir: String): DataFrame =
+    read(spark, checkpointDir, "flattened", Nil) { df =>
       val keyCols = df.select(col("key.*")).columns
         .map(c => col(s"key.$c").as(s"key_$c"))
       val valCols = df.select(col("value.*")).columns
@@ -93,8 +94,8 @@ object StateQueries {
     * column names don't depend on how the processor declared its
     * encoders. */
   def flattenedTws(spark: SparkSession, checkpointDir: String,
-                   stateVarName: String, batchId: Option[Long] = None): DataFrame =
-    read(spark, checkpointDir, "flattened", twsOptions(stateVarName, flattenCollections = true, batchId)) { df =>
+                   stateVarName: String): DataFrame =
+    read(spark, checkpointDir, "flattened", twsOptions(stateVarName, flattenCollections = true)) { df =>
       def expand(c: String, prefix: String) = df.schema(c).dataType match {
         case s: org.apache.spark.sql.types.StructType =>
           s.fieldNames.toSeq.map(f => col(s"$c.$f").as(
@@ -157,14 +158,20 @@ object StateQueries {
 private[state] final case class StateRead(checkpointDir: String, view: String,
                                           options: Seq[(String, String)])
 
-/** The per-commit memo of [[StateQueries]]' reads, one per session. Each
-  * read keeps its commit log's `FileSystem` and path (resolved once per
-  * read, not per probe) and the DataFrame resolved at the last commit
-  * probed. A call lists `<checkpoint>/commits` and reuses that DataFrame
-  * only when the latest commit file carries the token it was resolved
-  * under; a reader that probed a later commit than an entry's never gets
-  * the entry. With no usable commit log (no `commits/` directory, no
-  * commit yet, a listing that fails) the read is resolved with no memo.
+/** The per-commit memo of [[StateQueries]]' reads, one per session. A
+  * call finds the latest file under `<checkpoint>/commits` ([[latest]])
+  * and returns the DataFrame resolved before for the same read only when
+  * that file carries the token it was resolved under; a reader that
+  * probed a later commit than an entry's never gets the entry. The commit
+  * log's `FileSystem` and qualified path are resolved once per checkpoint
+  * path as given, not per probe, and entries are keyed by the qualified
+  * path, so `dir`, `dir/` and `file:/…/dir` share one. With no usable
+  * commit log (no `commits/` directory, no commit yet, a log that cannot
+  * be read) the read is resolved with no memo, and what was kept for that
+  * path is dropped. Each state table a memo entry reads is mapped to the
+  * commit it was resolved at ([[commitOf]]), so a replica's identity
+  * ([[StateReplica.versionOf]]) tells a rewritten checkpoint from the one
+  * it replaced.
   *
   * The session is held weakly (the key of a `WeakHashMap`) and each
   * DataFrame softly, so the memo pins no session: a session nothing else
@@ -181,17 +188,25 @@ private[state] object CommitMemo {
 
   private final class Resolved(val commit: Commit, val df: SoftReference[DataFrame])
 
-  private final class Slot(val fs: FileSystem, val commits: Path) {
-    @volatile var resolved: Resolved = _
+  /** A checkpoint's commit log: its `FileSystem`, its qualified path and
+    * the checkpoint's. */
+  private final class CommitLog(val fs: FileSystem, val dir: Path) {
+    val checkpoint: String = dir.getParent.toString
   }
 
   final class Memo {
-    private[CommitMemo] val slots = new ConcurrentHashMap[StateRead, Option[Slot]]
+    // checkpoint path as given -> its commit log
+    private[CommitMemo] val logs = new ConcurrentHashMap[String, CommitLog]
+    // keyed by the qualified checkpoint path
+    private[CommitMemo] val entries = new ConcurrentHashMap[StateRead, Resolved]
     val resolves = new AtomicLong
     val reuses = new AtomicLong
   }
 
   private val memos = new java.util.WeakHashMap[SparkSession, Memo]
+
+  /** The commit each state table a memo entry reads was resolved at. */
+  private val tokens = java.util.Collections.synchronizedMap(new java.util.WeakHashMap[Table, Commit])
 
   def of(spark: SparkSession): Memo = memos.synchronized {
     var memo = memos.get(spark)
@@ -203,16 +218,49 @@ private[state] object CommitMemo {
     memo
   }
 
+  /** The commit a state table read through the memo was resolved at, or
+    * None for one read some other way. */
+  def commitOf(table: Table): Option[Commit] = Option(tokens.get(table))
+
+  private def commitLog(spark: SparkSession, memo: Memo, checkpointDir: String): Option[CommitLog] =
+    Option(memo.logs.get(checkpointDir)).orElse {
+      try {
+        val commits = new Path(checkpointDir, "commits")
+        val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
+        val log = new CommitLog(fs, fs.makeQualified(commits))
+        memo.logs.put(checkpointDir, log)
+        Some(log)
+      } catch { case NonFatal(_) => None }
+    }
+
+  private def token(batch: Long, f: FileStatus) = Commit(batch, f.getModificationTime, f.getLen)
+
   /** The checkpoint's latest commit, or None when its commit log has no
-    * commit or cannot be listed. */
-  private def latest(slot: Slot): Option[Commit] =
+    * commit or cannot be read. From `last`, the commit an entry was
+    * resolved at, it steps file by file: the status of `<last>`, then of
+    * each next batch's file while one exists, so two `getFileStatus`
+    * calls when nothing has landed. Commit files are written one batch
+    * after another, so the last file found this way is the log's latest.
+    * With no `last`, or when its file is gone (the log was purged past
+    * it, or the checkpoint rewritten with fewer batches), it lists the
+    * log. */
+  private def latest(log: CommitLog, last: Option[Commit]): Option[Commit] =
     try {
-      val batches = slot.fs.listStatus(slot.commits)
-        .filter(f => f.isFile && f.getPath.getName.nonEmpty && f.getPath.getName.forall(Character.isDigit))
-      if (batches.isEmpty) None
-      else {
-        val f = batches.maxBy(_.getPath.getName.toLong)
-        Some(Commit(f.getPath.getName.toLong, f.getModificationTime, f.getLen))
+      def at(batch: Long): Option[FileStatus] =
+        try Some(log.fs.getFileStatus(new Path(log.dir, batch.toString)))
+        catch { case _: FileNotFoundException => None }
+      @tailrec def from(batch: Long, f: FileStatus): Commit = at(batch + 1) match {
+        case Some(next) => from(batch + 1, next)
+        case None       => token(batch, f)
+      }
+      last.flatMap(c => at(c.batchId).map(from(c.batchId, _))).orElse {
+        val batches = log.fs.listStatus(log.dir)
+          .filter(f => f.isFile && f.getPath.getName.nonEmpty && f.getPath.getName.forall(Character.isDigit))
+        if (batches.isEmpty) None
+        else {
+          val f = batches.maxBy(_.getPath.getName.toLong)
+          Some(token(f.getPath.getName.toLong, f))
+        }
       }
     } catch { case NonFatal(_) => None }
 
@@ -220,15 +268,15 @@ private[state] object CommitMemo {
     * commit before. */
   def apply(spark: SparkSession, read: StateRead)(resolve: => DataFrame): DataFrame = {
     val memo = of(spark)
-    val slot = memo.slots.computeIfAbsent(read, r =>
-      try {
-        val commits = new Path(r.checkpointDir, "commits")
-        Some(new Slot(commits.getFileSystem(spark.sessionState.newHadoopConf()), commits))
-      } catch { case NonFatal(_) => None })
-    val commit = slot.flatMap(latest)
-    val reused = for {
-      s <- slot; c <- commit; r <- Option(s.resolved) if r.commit == c; df <- Option(r.df.get)
-    } yield df
+    val log = commitLog(spark, memo, read.checkpointDir)
+    val key = log.map(l => read.copy(checkpointDir = l.checkpoint))
+    val entry = key.flatMap(k => Option(memo.entries.get(k)))
+    val commit = log.flatMap(latest(_, entry.map(_.commit)))
+    if (commit.isEmpty) {
+      memo.logs.remove(read.checkpointDir)
+      key.foreach(memo.entries.remove)
+    }
+    val reused = for (r <- entry; c <- commit if r.commit == c; df <- Option(r.df.get)) yield df
     reused match {
       case Some(df) =>
         memo.reuses.incrementAndGet()
@@ -236,7 +284,13 @@ private[state] object CommitMemo {
       case None =>
         val df = resolve
         memo.resolves.incrementAndGet()
-        for (s <- slot; c <- commit) s.resolved = new Resolved(c, new SoftReference(df))
+        for (k <- key; c <- commit) {
+          df.queryExecution.analyzed.foreach {
+            case r: DataSourceV2Relation if r.table.isInstanceOf[StateTable] => tokens.put(r.table, c)
+            case _ =>
+          }
+          memo.entries.put(k, new Resolved(c, new SoftReference(df)))
+        }
         df
     }
   }

@@ -143,10 +143,14 @@ private[state] object StateReplica {
     * replica exactly when their identities are equal. */
   final case class Version(stateTables: Seq[String], identity: Option[LogicalPlan])
 
-  /** A state-source relation reduced to its table's name. The name holds
-    * the checkpoint, the resolved batch id, the operator, the store and
-    * the read options, so a new commit changes it. */
-  private case class StateAt(table: String, output: Seq[Attribute]) extends LeafNode
+  /** A state-source relation reduced to its table's name and, for a table
+    * read through [[StateQueries]], the commit token it was resolved at
+    * ([[CommitMemo.Commit]]). The name holds the checkpoint, the resolved
+    * batch id, the operator, the store and the read options, so a new
+    * commit changes it; the token also changes when the checkpoint is
+    * deleted and rewritten at the same path up to the same batch id. */
+  private case class StateAt(table: String, commit: Option[CommitMemo.Commit], output: Seq[Attribute])
+    extends LeafNode
 
   private def isState(r: DataSourceV2Relation): Boolean = r.table.isInstanceOf[StateTable]
 
@@ -157,9 +161,9 @@ private[state] object StateReplica {
     * which the analyzed plan keeps unevaluated, so two evaluations at
     * different times look alike), and is not streaming. Its identity is
     * the analyzed plan, canonicalized, with each state-source relation
-    * replaced by its table's name. Anything else (a parquet table, a
-    * memory sink, a typed filter) may change without its plan changing,
-    * so it is re-read per request. */
+    * replaced by its table's name and commit token. Anything else (a
+    * parquet table, a memory sink, a typed filter) may change without its
+    * plan changing, so it is re-read per request. */
   def versionOf(df: DataFrame): Version = {
     val plan = df.queryExecution.analyzed
     val tables = plan.collect { case r: DataSourceV2Relation if isState(r) => r.table.name() }
@@ -179,7 +183,7 @@ private[state] object StateReplica {
       }
     val identity =
       if (reusable) Some(plan.transformUp {
-        case r: DataSourceV2Relation => StateAt(r.table.name(), r.output)
+        case r: DataSourceV2Relation => StateAt(r.table.name(), CommitMemo.commitOf(r.table), r.output)
       }.canonicalized)
       else None
     Version(tables, identity)

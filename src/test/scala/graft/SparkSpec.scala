@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -54,6 +56,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       seen.get
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Deletes `dir` and everything under it, if it exists. */
+  def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val walk = Files.walk(dir)
+      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
 
   override def afterAll(): Unit = {
     // session is shared across suites in one JVM; don't stop it here

@@ -4,16 +4,16 @@ import graft.SparkSpec
 import graft.streaming.WindowedStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.Comparator
 
 /** The four interactive state-query shapes of SURVEY.md §2.9 over a real
   * streaming checkpoint (reference `IQueriesService.java` endpoints;
   * in-process window scan `TopologiesTest.scala:60-70`), and the
   * per-commit memo behind the reads: one resolution per commit, a new
   * commit or a rewritten checkpoint resolved again, no entry shared
-  * between reads with different options, no memo without a commit log. */
+  * between reads with different options, one entry for every spelling of
+  * a path, no memo without a commit log. */
 class StateQueriesSpec extends SparkSpec {
 
   private val base = 1700000000L
@@ -158,13 +158,6 @@ class StateQueriesSpec extends SparkSpec {
     (a, r1 - r0, u1 - u0)
   }
 
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      finally walk.close()
-    }
-
   /** Writes a windowed count over `batches` (one micro-batch each) into a
     * checkpoint at `ckpt`, then stops the query. */
   private def windowedCounts(ckpt: String, batches: Seq[Seq[Ev]]): Unit = {
@@ -221,7 +214,7 @@ class StateQueriesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("a checkpoint deleted and rewritten at the same path and batch id is resolved again") {
+  test("a checkpoint deleted and rewritten at the same path is resolved again, at the same, a later or an earlier batch id") {
     val dir = Files.createTempDirectory("graft_memo_rewrite")
     val ckpt = dir.toString
     windowedCounts(ckpt, Seq(Seq(Ev("a", 1, ts(0)))))
@@ -233,9 +226,18 @@ class StateQueriesSpec extends SparkSpec {
     assert(batchOf(v2) == batchOf(v1), "the rewrite ends at the same batch")
     assert(resolves == 1 && reuses == 0, s"resolves $resolves, reuses $reuses")
     assert(keyCounts(v2) == Set(("z", 2L)))
+    // rewritten with more batches, then with fewer again
+    deleteTree(dir)
+    windowedCounts(ckpt, Seq(Seq(Ev("y", 1, ts(0))), Seq(Ev("y", 1, ts(1)))))
+    val v3 = StateQueries.flattened(spark, ckpt)
+    assert(batchOf(v3).head > batchOf(v1).head && keyCounts(v3) == Set(("y", 2L)))
+    deleteTree(dir)
+    windowedCounts(ckpt, Seq(Seq(Ev("x", 1, ts(0)))))
+    val v4 = StateQueries.flattened(spark, ckpt)
+    assert(batchOf(v4) == batchOf(v1) && keyCounts(v4) == Set(("x", 1L)))
   }
 
-  test("reads of two TWS variables and of an explicit batch id keep their own entries") {
+  test("reads of two TWS variables keep their own entries") {
     import graft.streaming.StreamKlDrift
     import graft.streaming.StreamKlDrift.TokDoc
     val s = spark
@@ -262,14 +264,15 @@ class StateQueriesSpec extends SparkSpec {
     assert(c1.columns.toSeq == Seq("key", "map_key", "value") && t1.columns.toSeq == Seq("key", "value"))
     assert(c1.select("map_key", "value").as[(String, Long)].collect().toMap == Map("the" -> 2L, "cat" -> 2L))
     assert(t1.select("value").as[Long].collect().toSeq == Seq(4L))
+  }
 
-    // the first batch's state, read by its id, is not the latest commit's
-    val latest = batchOf(c1).head
-    val at0 = StateQueries.flattenedTws(s, ckpt, "counts", batchId = Some(latest - 1))
-    assert(!(at0 eq c1) && batchOf(at0) == Seq(latest - 1))
-    assert(at0.select("map_key", "value").as[(String, Long)].collect().toMap == Map("the" -> 2L, "cat" -> 1L))
-    assert(StateQueries.flattenedTws(s, ckpt, "counts") eq c1)
-    assert(StateQueries.flattenedTws(s, ckpt, "counts", batchId = Some(latest - 1)) eq at0)
+  test("spellings of one checkpoint path share one entry") {
+    val ckpt = Files.createTempDirectory("graft_memo_spelling").toString
+    windowedCounts(ckpt, Seq(Seq(Ev("a", 1, ts(0)))))
+    val (dfs, resolves, reuses) = memoDuring(
+      Seq(ckpt, ckpt + "/", new java.io.File(ckpt).toURI.toString).map(StateQueries.flattened(spark, _)))
+    assert(resolves == 1 && reuses == 2, s"resolves $resolves, reuses $reuses")
+    assert(dfs.forall(_ eq dfs.head))
   }
 
   test("a directory without a usable commit log is resolved on every call, as without the memo") {
@@ -285,15 +288,11 @@ class StateQueriesSpec extends SparkSpec {
     val v = StateQueries.flattened(spark, ckpt)
     assert(keyCounts(v) == Set(("a", 1L)))
     assert(StateQueries.flattened(spark, ckpt) eq v)
-    // a commit log gone again is not answered from the memo: the source
-    // needs it even for an explicit batch id (Spark 4.1 reads the state's
-    // unique ids from it), so each call fails as the source does
-    val batch = batchOf(v).head
+    // a commit log gone again is not answered from the memo: each call
+    // fails as the source does
     deleteTree(dir.resolve("commits"))
-    val (_, _, u1) = memoDuring((1 to 2).foreach { _ =>
-      intercept[StateDataSourceException](StateQueries.flattened(spark, ckpt))
-      intercept[StateDataSourceException](StateQueries.flattened(spark, ckpt, batchId = Some(batch)))
-    })
+    val (_, _, u1) = memoDuring((1 to 2).foreach(_ =>
+      intercept[StateDataSourceException](StateQueries.flattened(spark, ckpt))))
     assert(u1 == 0)
   }
 }

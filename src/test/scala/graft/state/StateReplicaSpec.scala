@@ -14,9 +14,9 @@ import scala.io.Source
 import scala.jdk.CollectionConverters._
 
 /** `StateHttpServer`'s per-commit replica: once built, lookups on an
-  * unchanged checkpoint start no Spark job, a new commit shows on the next
-  * request, views that cannot be reused are re-read, concurrent requests
-  * build once, a replica is never replaced by an earlier commit's, a store
+  * unchanged checkpoint start no Spark job, a new commit and a checkpoint
+  * rewritten at the same path show on the next request, views that cannot
+  * be reused are re-read, concurrent requests build once, a replica is never replaced by an earlier commit's, a store
   * over the heap budget is paged by per-request reads, and every body and
   * paging header equals what the former in-Spark rendering (`to_json` →
   * `orderBy(key, json)` → `offset`/`limit + 1`, kept below as the oracle)
@@ -50,10 +50,16 @@ class StateReplicaSpec extends SparkSpec {
 
   /** A windowed-count checkpoint over `evs`, and its served view. */
   private def windowedCheckpoint(name: String, evs: Seq[Ev]): (String, () => DataFrame) = {
+    val ckpt = Files.createTempDirectory(name).toString
+    writeWindowed(ckpt, evs)
+    (ckpt, () => windowView(ckpt))
+  }
+
+  /** Commits one batch of a windowed count over `evs` into `ckpt`. */
+  private def writeWindowed(ckpt: String, evs: Seq[Ev]): Unit = {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
-    val ckpt = Files.createTempDirectory(name).toString
     val in = MemoryStream[Ev]
     val q = WindowedStreams.tumblingCounts(in.toDF(), "ts", "10 seconds", "1 hour", col("key"))
       .writeStream.format("noop").option("checkpointLocation", ckpt)
@@ -62,7 +68,6 @@ class StateReplicaSpec extends SparkSpec {
       in.addData(evs)
       q.processAllAvailable()
     } finally q.stop()
-    (ckpt, () => windowView(ckpt))
   }
 
   private def windowView(ckpt: String): DataFrame =
@@ -219,6 +224,35 @@ class StateReplicaSpec extends SparkSpec {
       assert(m1.get("state_batch_ids").size == 1 && m.get("state_batch_ids").size == 1 &&
         m.get("state_batch_ids").get(0).asLong > m1.get("state_batch_ids").get(0).asLong, m)
     } finally { srv.stop(); q.stop() }
+  }
+
+  test("a checkpoint deleted and rewritten at the same path and batch id shows on the next GET") {
+    val (ckpt, view) = windowedCheckpoint("graft_replica_rewrite", Seq(Ev("a", ts(0))))
+    val srv = new StateHttpServer(spark)
+      .registerView("w", view, keyCol = "key", winStartCol = Some("win_start"))
+    val port = srv.start()
+    val all = "/state/keyvalues/w/all"
+    try {
+      (1 to 3).foreach(_ => assert(get(port, all)._2 == s"""[{"key":"a","win_start":$base,"cnt":1}]"""))
+      val m1 = metrics(port)("w")
+      assert(m1.get("replica_builds").asLong == 1 && m1.get("served_from_replica").asLong == 2, m1)
+      deleteTree(java.nio.file.Paths.get(ckpt))
+      writeWindowed(ckpt, Seq(Ev("z", ts(0)), Ev("z", ts(1))))
+      val z = s"""[{"key":"z","win_start":$base,"cnt":2}]"""
+      // read until the rewritten checkpoint's replica is built, then
+      // served from it
+      var n = 0
+      while (metrics(port)("w").get("replica_builds").asLong < 2) {
+        assert(n < 50, metrics(port)("w"))
+        assert(get(port, all)._2 == z)
+        n += 1
+      }
+      val served = metrics(port)("w").get("served_from_replica").asLong
+      assert(get(port, all)._2 == z)
+      val m = metrics(port)("w")
+      assert(m.get("state_batch_ids") == m1.get("state_batch_ids"), "the rewrite ends at the same batch")
+      assert(m.get("served_from_replica").asLong == served + 1, m)
+    } finally srv.stop()
   }
 
   test("a view over a parquet table is re-read on every request") {
