@@ -103,6 +103,14 @@ object SparkEntry {
       .agg(round(sum("value"), 2).as("total"))
       .orderBy(col("total").desc, col("user_id").asc).limit(10)
 
+  /** g2's customer→part purchase edges (u, p), exposed for the
+    * plan-guard spec: at test scale g2 runs HITS on the driver, so the
+    * guard builds the distributed half-steps over these edges itself. */
+  private[graft] def purchaseEdges(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
+
   private val tsFmt = "yyyy-MM-dd"
 
   /** The reference/current window boundary shared by x50 (incremental
@@ -1881,13 +1889,7 @@ object SparkEntry {
     // span it (hubs). Integer micro-unit scores — BIGINT sums are
     // order-independent, so the 2-iteration trajectory is engine-EXACT,
     // not rounding-pinned. Same join+agg iteration shape as t18
-    "g2_hits" -> ((s, dir) => {
-      val edges = Tables.orders(s, dir)
-        .join(Tables.lineitem(s, dir),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
-      GraphOps.hitsL1(edges, iters = 2)
-    }),
+    "g2_hits" -> ((s, dir) => GraphOps.hitsL1(purchaseEdges(s, dir), iters = 2)),
 
     // item-item co-occurrence (market-basket): parts bought together in
     // one order, scored by cosine co/√(nₐ·n_b) over basket counts. The

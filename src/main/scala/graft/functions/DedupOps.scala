@@ -936,14 +936,14 @@ object DedupOps {
     * Small graphs short-circuit to a driver union-find: the edge list has
     * already survived LSH banding AND exact-Jaccard thresholding, so in
     * practice it is minuscule next to the corpus (tens of pairs per 10⁴
-    * docs here). When it fits the `driverEdgeBudget`, a sequential
-    * union-find with path compression (O(E·α)) replaces O(diameter)
-    * distributed rounds whose per-round job-scheduling cost dwarfs the
-    * actual work; above the budget — or for non-integral id types — the
-    * distributed loop runs. The budget bounds driver memory explicitly
-    * (2^22 edges ≈ 64 MB collected), the same small-side reasoning as a
-    * broadcast-join threshold; both paths compute the identical fixpoint
-    * and both stay spec- and oracle-covered.
+    * docs here). When it fits the `driverEdgeBudget` (probed by
+    * [[DriverBudget.collectWithin]], shared with [[GraphOps.hitsL1]]), a
+    * sequential union-find with path compression (O(E·α)) replaces
+    * O(diameter) distributed rounds whose per-round job-scheduling cost
+    * dwarfs the actual work; above the budget — or for non-integral id
+    * types — the distributed loop runs. The budget bounds driver memory
+    * explicitly (2^22 edges ≈ 64 MB collected); both paths compute the
+    * identical fixpoint and both stay spec- and oracle-covered.
     *
     * NOTE: construction is EAGER when the fast path is considered (the
     * probe collect runs the upstream edge pipeline once at builder time,
@@ -957,20 +957,16 @@ object DedupOps {
     val idCol = nodes.columns.head
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val idType = edges.schema("a").dataType
-    // A collect cannot exceed Int.MaxValue rows, so larger budgets clamp
-    // (saturating — no overflow for e.g. Long.MaxValue "unlimited").
-    val budget = math.min(math.max(driverEdgeBudget, 0L), (Int.MaxValue - 1).toLong)
-    // Probe and payload in ONE pass: collect up to budget+1 edges; an
-    // overflowing row falls through to the distributed loop (re-running
-    // the edge pipeline once — bounded, rare), otherwise the collected
-    // array IS the working set and the upstream pipeline ran exactly once.
-    val probed: Array[org.apache.spark.sql.Row] =
-      if ((idType == LongType || idType == IntegerType) && budget > 0)
-        edges.select(col("a").cast("long"), col("b").cast("long"))
-          .limit(budget.toInt + 1).collect()
-      else null
-    if (probed != null && probed.length <= budget) {
-      val pairs = probed.map(r => (r.getLong(0), r.getLong(1)))
+    // An overflowing probe falls through to the distributed loop
+    // (re-running the edge pipeline once — bounded, rare); otherwise the
+    // collected array IS the working set and the pipeline ran once.
+    val probed =
+      if (idType == LongType || idType == IntegerType)
+        DriverBudget.collectWithin(
+          edges.select(col("a").cast("long"), col("b").cast("long")), driverEdgeBudget)
+      else None
+    if (probed.nonEmpty) {
+      val pairs = probed.get.map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Corpus-graph analytics: weighted PageRank (TextRank keyword scoring
@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
   * algebra over a distributed edge table — rank state is a (node, r)
   * DataFrame, NEVER collected to the driver (unlike k-means, whose
   * state is k rows by contract; a graph's node set is corpus-sized).
+  * The one exception is [[hitsL1]]'s budgeted fast path, which runs on
+  * the driver only when the edge table fits a row budget.
   *
   * Determinism contract: per-iteration ranks are rounded to 6 places
   * (the s7 Lloyd convention), so the unrolled DuckDB oracle replays the
@@ -161,23 +163,44 @@ object GraphOps {
     * in-edges), then h(u) = normalize(Σ a over out-edges). Returns
     * (role ∈ {auth, hub}, node, score).
     *
-    * Scale shape: score state is a DISTRIBUTED (node, score) table
-    * (node sets are corpus-sized — never collected); each half-step is
-    * one equi-join on the contributing endpoint + one groupBy, and the
-    * Σraw normalizer rides a 1-row broadcast. Two embodiments, chosen
-    * by depth: iters ≤ 4 stays one lazy action-free plan
-    * ([[hitsLazy]]); deeper fixpoints checkpoint per round
-    * ([[hitsCheckpointed]], the d7 CC-loop pattern) so neither the plan
-    * nor the recompute grows with iteration count. Both compute the
-    * identical integer trajectory. */
-  def hitsL1(edges: DataFrame, iters: Int = 2): DataFrame = {
+    * Small graphs run on the driver, the [[DedupOps.connectedComponents]]
+    * fast path: the distinct (u, p) pairs are probed ONCE by
+    * [[DriverBudget.collectWithin]], and when they fit
+    * `driverEdgeBudget` (integral ids only) the exact integer trajectory
+    * runs in driver memory and comes back as a local relation — one
+    * probe query instead of a distributed round's jobs per half-step.
+    * NOTE: construction is therefore EAGER when the fast path is
+    * considered (the probe runs the upstream edge pipeline at builder
+    * time); callers that only want the unexecuted distributed plan pass
+    * `driverEdgeBudget = 0`.
+    *
+    * Scale shape above the budget: score state is a DISTRIBUTED
+    * (node, score) table; each half-step is one equi-join on the
+    * contributing endpoint + one groupBy, and the Σraw normalizer rides
+    * a 1-row broadcast ([[hitsHalfStep]]). Rounds checkpoint one by one
+    * ([[hitsCheckpointed]], the d7 CC-loop pattern), so neither the plan
+    * nor the recompute grows with iteration count. Both paths compute
+    * the identical integer trajectory. */
+  def hitsL1(edges: DataFrame, iters: Int = 2,
+             driverEdgeBudget: Long = 1L << 22): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
     require(iters >= 1, s"iters >= 1, got $iters")
-    if (iters <= 4) hitsLazy(edges, iters) else hitsCheckpointed(edges, iters)
+    val e = hitsInit(edges)
+    val integral = Seq("u", "p").forall(c => e.schema(c).dataType match {
+      case LongType | IntegerType => true
+      case _ => false
+    })
+    val probed =
+      if (integral)
+        DriverBudget.collectWithin(
+          e.select(col("u").cast("long"), col("p").cast("long")), driverEdgeBudget)
+      else None
+    probed.flatMap(hitsOnDriver(e, _, iters))
+      .getOrElse(hitsCheckpointed(edges, iters))
   }
 
-  /** One normalization half-step shared by both HITS embodiments: raw
-    * integer scores → micro-unit scores summing to ~10⁶, the Σraw
-    * normalizer riding a 1-row broadcast. */
+  /** One normalization half-step: raw integer scores → micro-unit scores
+    * summing to ~10⁶, the Σraw normalizer riding a 1-row broadcast. */
   private def hitsNorm(grouped: DataFrame, node: String): DataFrame = {
     val s = grouped.agg(sum(col("raw")).as("s"))
     grouped.crossJoin(broadcast(s))
@@ -186,49 +209,91 @@ object GraphOps {
           .cast("long").as("score"))
   }
 
-  private def hitsInit(edges: DataFrame): DataFrame =
+  /** One distributed half-step: the (`from`, score) table's scores
+    * summed over the edges onto each `to` endpoint and normalized.
+    * Factored out so the plan-shape guard inspects the SHIPPED half-step
+    * (the checkpointed loop's returned plan is just snapshot scans). */
+  private[graft] def hitsHalfStep(e: DataFrame, scores: DataFrame,
+                                  from: String, to: String): DataFrame =
+    hitsNorm(e.join(scores, from).groupBy(to).agg(sum("score").as("raw")), to)
+
+  private[graft] def hitsInit(edges: DataFrame): DataFrame =
     edges.select(col("u"), col("p")).distinct()
+
+  private[graft] def hitsHub0(e: DataFrame): DataFrame =
+    e.select(col("u")).distinct().select(col("u"), lit(1000000L).as("score"))
 
   private def hitsResult(auth: DataFrame, hub: DataFrame): DataFrame =
     auth.select(lit("auth").as("role"), col("p").as("node"), col("score"))
       .unionByName(
         hub.select(lit("hub").as("role"), col("u").as("node"), col("score")))
 
-  /** Shallow fixpoints (iters ≤ 4): one action-free plan whose state
-    * tables ride LAZY snapshots. The Σraw normalizer references each
-    * half-step's aggregate twice and every half-step references the
-    * previous score table twice, so a fully lazy plan holds ~4^iters
-    * copies of the edge-aggregate subtree — and the r17 measurement
-    * showed the EXECUTED AQE plan really runs them (70 orders scans,
-    * 179 exchanges for g2 at iters = 2; stage reuse only deduped 14).
-    * A lazy `localCheckpoint` per half-step (plus one for the edge
-    * table) pins each state table to one RDD computed exactly once —
-    * no per-round driver action, the final action materializes the
-    * chain in dependency order. Snapshots are (node, score)-sized, the
-    * documented d7 leak, freed with the session. */
-  private def hitsLazy(edges: DataFrame, iters: Int): DataFrame = {
-    // NOTE (r17): a variant with PRE-PARTITIONED + pre-sorted edge
-    // snapshots per join key (eu by u, ep by p — so no per-half-step
-    // Exchange/Sort on the edge side) was A/B-measured at bench scale
-    // and REGRESSED g2 2.31 → 2.75 s (anchors flat): the two extra
-    // edge materializations cost more than the per-round edge exchange
-    // they replace while AQE runtime-broadcasts the (small-here) score
-    // side anyway. Revisit only if iters grows well past 2·(edge
-    // materialization / half-step exchange) at the target scale.
-    val e = hitsInit(edges).localCheckpoint(false)
-    var hub = e.select(col("u")).distinct()
-      .select(col("u"), lit(1000000L).as("score"))
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
-      auth = hitsNorm(e.join(hub, "u").groupBy("p").agg(sum("score").as("raw")), "p")
-        .localCheckpoint(false)
-      hub = hitsNorm(e.join(auth, "p").groupBy("u").agg(sum("score").as("raw")), "u")
-        .localCheckpoint(false)
+  /** [[hitsCheckpointed]]'s trajectory in driver memory over the probed
+    * distinct (u, p) pairs (as longs): ids index sorted primitive arrays
+    * and each half-step is one pass over the edge index arrays. Each
+    * normalization is Spark's own `round` on a double,
+    * BigDecimal(x).setScale(0, HALF_UP) — not `math.round`. The two
+    * result frames take their schemas from the analyzed (never executed)
+    * distributed half-steps, so [[hitsResult]]'s union coerces the node
+    * type as the distributed plan does. None — the distributed path
+    * runs — for a null id or a zero Σraw, whose semantics (null join
+    * keys, Spark's divide by zero) stay Spark's. */
+  private def hitsOnDriver(e: DataFrame, rows: Array[Row],
+                           iters: Int): Option[DataFrame] = {
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val us = rows.map(_.getLong(0))
+    val ps = rows.map(_.getLong(1))
+    def sortedDistinct(xs: Array[Long]): Array[Long] = {
+      val a = xs.clone()
+      java.util.Arrays.sort(a)
+      var n = 0
+      var i = 0
+      while (i < a.length) {
+        if (n == 0 || a(n - 1) != a(i)) { a(n) = a(i); n += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(a, n)
     }
-    hitsResult(auth, hub)
+    val uIds = sortedDistinct(us)
+    val pIds = sortedDistinct(ps)
+    val eu = us.map(java.util.Arrays.binarySearch(uIds, _))
+    val ep = ps.map(java.util.Arrays.binarySearch(pIds, _))
+    def step(scores: Array[Long], from: Array[Int], to: Array[Int],
+             n: Int): Option[Array[Long]] = {
+      val raw = new Array[Long](n)
+      var total = 0L
+      var i = 0
+      while (i < from.length) {
+        raw(to(i)) += scores(from(i))
+        total += scores(from(i))
+        i += 1
+      }
+      if (total == 0) None
+      else Some(raw.map(r => java.math.BigDecimal.valueOf(r.toDouble * 1e6 / total.toDouble)
+        .setScale(0, java.math.RoundingMode.HALF_UP).longValue))
+    }
+    var hub = Option(Array.fill(uIds.length)(1000000L))
+    var auth: Option[Array[Long]] = None
+    var i = 0
+    while (i < iters && hub.nonEmpty) {
+      auth = step(hub.get, eu, ep, pIds.length)
+      hub = auth.flatMap(step(_, ep, eu, uIds.length))
+      i += 1
+    }
+    val authShape = hitsHalfStep(e, hitsHub0(e), "u", "p")
+    val hubShape = hitsHalfStep(e, authShape, "p", "u")
+    def frame(shape: DataFrame, ids: Array[Long], scores: Array[Long]): DataFrame = {
+      val intIds = shape.schema.head.dataType == org.apache.spark.sql.types.IntegerType
+      val out = new java.util.ArrayList[Row](ids.length)
+      for (k <- ids.indices)
+        out.add(Row(if (intIds) Int.box(ids(k).toInt) else Long.box(ids(k)), scores(k)))
+      e.sparkSession.createDataFrame(out, shape.schema)
+    }
+    for (a <- auth; h <- hub)
+      yield hitsResult(frame(authShape, pIds, a), frame(hubShape, uIds, h))
   }
 
-  /** Deep fixpoints (iters > 4): the d7 CC-loop discipline — each
+  /** The distributed loop: the d7 CC-loop discipline — each
     * round's auth/hub snapshots are LAZILY localCheckpoint'ed and one
     * count() per round materializes them (cutting lineage, so the plan
     * and the recompute stay constant-size per round), then the previous
@@ -241,24 +306,27 @@ object GraphOps {
     * caller).
     *
     * Integer micro-unit arithmetic is round-for-round EXACT, so this
-    * path is spec-pinned equal to [[hitsLazy]] at equal iters. */
-  private[functions] def hitsCheckpointed(edges: DataFrame, iters: Int): DataFrame = {
+    * path is spec-pinned equal to [[hitsOnDriver]] at equal iters. */
+  private def hitsCheckpointed(edges: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.GraftShims
+    // NOTE (r17): a variant with PRE-PARTITIONED + pre-sorted edge
+    // snapshots per join key (eu by u, ep by p — so no per-half-step
+    // Exchange/Sort on the edge side) was A/B-measured at bench scale
+    // and REGRESSED g2 2.31 → 2.75 s (anchors flat): the two extra
+    // edge materializations cost more than the per-round edge exchange
+    // they replace while AQE runtime-broadcasts the (small-here) score
+    // side anyway. Revisit only if iters grows well past 2·(edge
+    // materialization / half-step exchange) at the target scale.
     val e = hitsInit(edges).localCheckpoint(false) // round 1's action materializes it
-    var hub = e.select(col("u")).distinct()
-      .select(col("u"), lit(1000000L).as("score"))
+    var hub = hitsHub0(e)
     var auth: DataFrame = null
     var prevA: DataFrame = null
     var prevH: DataFrame = null
     for (_ <- 1 to iters) {
       // lazy (no-arg localCheckpoint is EAGER): the count below is the
       // round's single materializing action for BOTH half-steps
-      val a = hitsNorm(
-        e.join(hub, "u").groupBy("p").agg(sum("score").as("raw")), "p")
-        .localCheckpoint(false)
-      val h = hitsNorm(
-        e.join(a, "p").groupBy("u").agg(sum("score").as("raw")), "u")
-        .localCheckpoint(false)
+      val a = hitsHalfStep(e, hub, "u", "p").localCheckpoint(false)
+      val h = hitsHalfStep(e, a, "p", "u").localCheckpoint(false)
       h.count()
       if (prevA != null) GraftShims.unpersistLocalCheckpoint(prevA)
       if (prevH != null) GraftShims.unpersistLocalCheckpoint(prevH)

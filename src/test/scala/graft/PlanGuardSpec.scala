@@ -295,7 +295,16 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("g2 HITS: every half-step an equi join; normalizers ride 1-row broadcasts") {
-    val p = planOf("g2_hits")
+    // at test scale g2 runs HITS on the driver (a local relation), and the
+    // distributed loop (driverEdgeBudget = 0) checkpoints per round, so
+    // its returned plan is snapshot scans: guard one SHIPPED distributed
+    // round (GraphOps.hitsHalfStep, auth then hub) over g2's edge table
+    // instead, the g4 pattern
+    import graft.functions.GraphOps
+    val e = GraphOps.hitsInit(SparkEntry.purchaseEdges(spark, dir))
+    val auth = GraphOps.hitsHalfStep(e, GraphOps.hitsHub0(e), "u", "p")
+    val p = plan(GraphOps.hitsHalfStep(e, auth, "p", "u"))
+    assert(p.contains("BroadcastNestedLoopJoin BuildRight, Cross"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("WindowExec"), p)
     // the only nested-loops allowed are the 1-row Σraw normalizer

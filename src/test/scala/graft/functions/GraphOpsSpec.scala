@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Graph analytics: PageRank invariants (mass conservation, symmetry,
@@ -12,6 +13,26 @@ class GraphOpsSpec extends SparkSpec {
     val df = pairs.toDF("a", "b")
     df.unionAll(df.select(col("b").as("a"), col("a").as("b")))
       .groupBy("a", "b").agg(count(lit(1)).cast("double").as("w"))
+  }
+
+  private def hitsMap(df: DataFrame): Map[(String, Long), Long] =
+    df.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+
+  /** The logical leaves of a HITS result: a local relation (the driver
+    * path) or snapshot scans (the distributed loop). */
+  private def leaves(df: DataFrame): Seq[String] =
+    df.queryExecution.logical.collectLeaves().map(_.nodeName).distinct
+
+  /** The driver path and the distributed path (`driverEdgeBudget = 0`)
+    * return identical schemas and identical rows. */
+  private def assertPathsAgree(e: DataFrame, iters: Int, clue: String = ""): Unit = {
+    val driver = GraphOps.hitsL1(e, iters)
+    val distributed = GraphOps.hitsL1(e, iters, driverEdgeBudget = 0)
+    assert(leaves(driver) == Seq("LocalRelation"), clue)
+    assert(leaves(distributed) == Seq("LogicalRDD"), clue)
+    assert(driver.schema == distributed.schema, clue)
+    assert(driver.collect().toSeq.sortBy(_.toString) ==
+      distributed.collect().toSeq.sortBy(_.toString), clue)
   }
 
   test("pageRank conserves mass and is uniform on a symmetric cycle") {
@@ -49,6 +70,7 @@ class GraphOpsSpec extends SparkSpec {
     // symmetric hubs score identically
     Seq(2L, 3L, 4L).foreach(u =>
       assert(out(("hub", u)) == out(("hub", 1L)), out))
+    assertPathsAgree(e, 2)
   }
 
   test("hitsL1 conserves micro-unit mass per side (±1 rounding per node)") {
@@ -60,6 +82,10 @@ class GraphOpsSpec extends SparkSpec {
     val hubs = out.collect { case ("hub", s) => s }
     assert(math.abs(auths.sum - 1000000L) <= auths.size, auths.toSeq)
     assert(math.abs(hubs.sum - 1000000L) <= hubs.size, hubs.toSeq)
+    assertPathsAgree(e, 3)
+    // INT ids, alone and mixed with BIGINT (the role union widens node)
+    assertPathsAgree(e.select(col("u").cast("int"), col("p").cast("int")), 3, "int")
+    assertPathsAgree(e.select(col("u").cast("int"), col("p")), 3, "int/bigint")
   }
 
   test("hitsL1 equals an independent in-memory replay on random bipartite graphs") {
@@ -98,20 +124,56 @@ class GraphOpsSpec extends SparkSpec {
       val hubs = out.collect { case (("hub", n), v) => n -> v }.toMap
       assert(auths == authE, s"seed=$seed auth")
       assert(hubs == hubE, s"seed=$seed hub")
+      assertPathsAgree(es.toDF("u", "p"), 3, s"seed=$seed")
     }
   }
 
-  test("checkpointed HITS equals the lazy plan at equal iters (exact)") {
+  test("HITS driver path equals the checkpointed path (exact)") {
     import spark.implicits._
     val e = Seq(1L -> 100L, 2L -> 100L, 3L -> 100L, 4L -> 100L,
       1L -> 11L, 2L -> 12L, 3L -> 13L, 4L -> 14L, 2L -> 11L).toDF("u", "p")
     // same integer trajectory, different execution discipline — must be
     // EXACT, not approximately equal
-    val lazyOut = GraphOps.hitsL1(e, iters = 4)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val ckptOut = GraphOps.hitsCheckpointed(e, iters = 4)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(ckptOut == lazyOut)
+    assertPathsAgree(e, 4)
+  }
+
+  test("HITS takes the distributed path above the budget, for string or null ids") {
+    import spark.implicits._
+    // 9 distinct pairs; the repeated pair must not count against the budget
+    val pairs = Seq(1L -> 100L, 2L -> 100L, 3L -> 100L, 4L -> 100L,
+      1L -> 11L, 2L -> 12L, 3L -> 13L, 4L -> 14L, 2L -> 11L)
+    val e = (pairs :+ (1L -> 100L)).toDF("u", "p")
+    assert(leaves(GraphOps.hitsL1(e, 2, driverEdgeBudget = 9)) == Seq("LocalRelation"))
+    val over = GraphOps.hitsL1(e, 2, driverEdgeBudget = 8)
+    assert(leaves(over) == Seq("LogicalRDD"))
+    val expected = hitsMap(GraphOps.hitsL1(e, 2))
+    assert(hitsMap(over) == expected)
+    // non-integral ids never take the driver path, whatever the budget
+    val strings = GraphOps.hitsL1(
+      pairs.map { case (u, p) => (u.toString, p.toString) }.toDF("u", "p"), 2)
+    assert(leaves(strings) == Seq("LogicalRDD"))
+    assert(strings.collect().map(r =>
+      (r.getString(0), r.getString(1).toLong) -> r.getLong(2)).toMap == expected)
+    // a null id keeps Spark's null-key join semantics: distributed path
+    val withNull = Seq(1L -> Option(100L), 2L -> Option(100L), 3L -> None).toDF("u", "p")
+    assert(leaves(GraphOps.hitsL1(withNull, 2)) == Seq("LogicalRDD"))
+  }
+
+  test("a within-budget hitsL1 runs only its probe query and plans no shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    val e = Seq(1L -> 100L, 2L -> 100L, 3L -> 100L, 1L -> 11L, 2L -> 12L)
+      .toDF("u", "p").repartition(2)
+    val probeJobs = jobsDuring(DriverBudget.collectWithin(GraphOps.hitsInit(e)
+      .select(col("u").cast("long"), col("p").cast("long")), 1L << 22))
+    assert(probeJobs > 0)
+    var out: DataFrame = null
+    assert(jobsDuring { out = GraphOps.hitsL1(e, iters = 2) } == probeJobs)
+    assert(jobsDuring(GraphOps.hitsL1(e, iters = 2, driverEdgeBudget = 0)) > probeJobs)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = out.queryExecution.executedPlan
+    assert(helper.collect(plan) { case x: ShuffleExchangeExec => x }.isEmpty, plan)
   }
 
   test("deep HITS (iters > 4) converges and stays exact vs the in-memory replay") {

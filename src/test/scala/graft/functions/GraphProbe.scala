@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
-
-/** Throwaway profiling probe comparing the two HITS embodiments at the
-  * bench's iters=2 (hitsLazy = one action-free plan with exchange
-  * reuse; hitsCheckpointed = per-round localCheckpoint snapshots). */
+/** Throwaway profiling probe comparing the two HITS paths at the
+  * bench's iters=2: the budgeted driver path (one probe query) and the
+  * distributed per-round checkpointed loop (`driverEdgeBudget = 0`). */
 object GraphProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -17,27 +15,19 @@ object GraphProbe {
       println(f"GRAPHPROBE $label%-24s ${(System.nanoTime() - t0) / 1e9}%.3f s")
       r
     }
-    def edges = graft.Tables.orders(spark, sfDir)
-      .join(graft.Tables.lineitem(spark, sfDir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
+    def edges = graft.SparkEntry.purchaseEdges(spark, sfDir)
     for (rep <- 1 to 3) {
       println(s"GRAPHPROBE ---- rep $rep")
       t("edges.count") { edges.count() }
-      val e = edges.select(col("u"), col("p")).distinct()
+      val e = GraphOps.hitsInit(edges)
       t("distinct.count") { e.count() }
-      val hub0 = e.select(col("u")).distinct()
-        .select(col("u"), lit(1000000L).as("score"))
       t("half-step.count") {
-        val grouped = e.join(hub0, "u").groupBy("p").agg(sum("score").as("raw"))
-        val s = grouped.agg(sum(col("raw")).as("s"))
-        grouped.crossJoin(broadcast(s))
-          .select(col("p"),
-            round(col("raw").cast("double") * lit(1e6) / col("s"))
-              .cast("long").as("score")).count()
+        GraphOps.hitsHalfStep(e, GraphOps.hitsHub0(e), "u", "p").count()
       }
-      t("hitsL1(1).count") { GraphOps.hitsL1(edges, iters = 1).count() }
-      t("hitsLazy(2)") { GraphOps.hitsL1(edges, iters = 2).count() }
+      t("hitsL1(2) driver") { GraphOps.hitsL1(edges, iters = 2).count() }
+      t("hitsL1(2) distributed") {
+        GraphOps.hitsL1(edges, iters = 2, driverEdgeBudget = 0).count()
+      }
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** FK-join edge-case catalog (SURVEY.md §2.5; reference scenarios at
   * `TopologiesTest.scala:100-217`, `InnerFKJoinTest.scala:11-24`).
@@ -16,8 +17,20 @@ class FkJoinStreamSpec extends SparkSpec {
     if (fk.isEmpty) null else fk
   }
 
+  /** One side's input. Each `addData` is processed to completion before
+    * it returns, so micro-batches follow the order a case writes its
+    * feed. Otherwise the running query could read the left stream before
+    * a left add and the right stream after a later right add, and one
+    * batch would hold the right row without the left row written first. */
+  private final class Side(stream: MemoryStream[Rec], q: StreamingQuery) {
+    def addData(recs: Rec*): Unit = {
+      stream.addData(recs)
+      q.processAllAvailable()
+    }
+  }
+
   private var n = 0
-  private def run(how: String)(feed: (MemoryStream[Rec], MemoryStream[Rec]) => Unit): List[FkJoinChange] = {
+  private def run(how: String)(feed: (Side, Side) => Unit): List[FkJoinChange] = {
     val s = spark
     import s.implicits._
     implicit val sql = s.sqlContext
@@ -28,8 +41,7 @@ class FkJoinStreamSpec extends SparkSpec {
     val q = FkJoinStream.join(left.toDS(), right.toDS(), fkOf, how)
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
-      feed(left, right)
-      q.processAllAvailable()
+      feed(new Side(left, q), new Side(right, q))
       s.table(name).as[FkJoinChange].collect()
         .sortBy(c => (c.seq, c.deleted)).toList   // tie rule: upsert wins/sorts first
     } finally q.stop()
